@@ -22,6 +22,7 @@ from mapr_plugins_spark.operators import similarity as S
 from mapr_plugins_spark.operators import text as X
 from mapr_plugins_spark.plans.partitioning import fan_out
 from mapr_plugins_spark.operators.reg_common import _data_fingerprint, _ensure_staged
+from mapr_plugins_spark.session import scratch_dir
 
 
 def q24_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,11 +99,7 @@ _INDEX_CODE_VERSION = "c2"  # c2: LSH signature → exact integer micro-units
 
 
 def _lsh_index_dir(sf_dir: str) -> str:
-    import os
-
-    d = f"/tmp/mapr_plugins_lsh/{_data_fingerprint(sf_dir)}-lsh6-{_INDEX_CODE_VERSION}"
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+    return scratch_dir("lsh", f"{_data_fingerprint(sf_dir)}-lsh6-{_INDEX_CODE_VERSION}")
 
 
 def x_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,28 +120,16 @@ def x_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_dir(sf_dir: str) -> str:
-    import os
-
     # v2: corpus/centroids subdirs (atomically-renameable single root)
-    d = f"/tmp/mapr_plugins_ivf/{_data_fingerprint(sf_dir)}-ivf16v2-{_INDEX_CODE_VERSION}"
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+    return scratch_dir("ivf", f"{_data_fingerprint(sf_dir)}-ivf16v2-{_INDEX_CODE_VERSION}")
 
 
 def _pq_index_dir(sf_dir: str) -> str:
-    import os
-
-    d = f"/tmp/mapr_plugins_pq/{_data_fingerprint(sf_dir)}-pq8x16-{_INDEX_CODE_VERSION}"
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+    return scratch_dir("pq", f"{_data_fingerprint(sf_dir)}-pq8x16-{_INDEX_CODE_VERSION}")
 
 
 def _ivfpq_index_dir(sf_dir: str) -> str:
-    import os
-
-    d = f"/tmp/mapr_plugins_ivfpq/{_data_fingerprint(sf_dir)}-ivfpq8l8m16-{_INDEX_CODE_VERSION}"
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+    return scratch_dir("ivfpq", f"{_data_fingerprint(sf_dir)}-ivfpq8l8m16-{_INDEX_CODE_VERSION}")
 
 
 def x_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from mapr_plugins_spark.operators import similarity as S
 from mapr_plugins_spark.operators import text as X
 from mapr_plugins_spark.plans.partitioning import fan_out
 from mapr_plugins_spark.operators.reg_common import _BAND_ROWS, _CORPUS_SQL, _MINHASH_SEEDS, _TOKS_SQL, _data_fingerprint, _dedup_corpus, _ensure_staged, _int_d2_sql, _langid_sql, _minhash_pairs_ctes, _quality_sql
+from mapr_plugins_spark.session import scratch_dir
 _SIMHASH_BITS = 32
 
 
@@ -208,14 +209,10 @@ def x_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sigstore_dir(sf_dir: str) -> str:
-    import os
-
-    d = (
-        f"/tmp/mapr_plugins_sigstore/"
-        f"{_data_fingerprint(sf_dir, 'documents')}-mh{_MINHASH_SEEDS}b{_BAND_ROWS}"
+    return scratch_dir(
+        "sigstore",
+        f"{_data_fingerprint(sf_dir, 'documents')}-mh{_MINHASH_SEEDS}b{_BAND_ROWS}",
     )
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
 
 
 def x_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from mapr_plugins_spark.operators import similarity as S
 from mapr_plugins_spark.operators import text as X
 from mapr_plugins_spark.plans.partitioning import fan_out
 from mapr_plugins_spark.operators.reg_common import SCD2_APPLY_CUTOFF_US
+from mapr_plugins_spark.session import scratch_dir
 
 _MM_FEATURES_SQL = """
     SELECT doc_id,
@@ -136,7 +137,6 @@ def x_doc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a full-value proof that write∘read is the identity, graded by
     the driver rather than unit tests alone."""
     import hashlib
-    import os
 
     from mapr_plugins_spark.sinks.document import (
         read_document_table,
@@ -145,8 +145,7 @@ def x_doc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
     key = hashlib.md5(f"{sf_dir}/docsink".encode()).hexdigest()[:12]
-    path = f"/tmp/mapr_plugins_docsink/{key}"
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = scratch_dir("docsink", key)
     write_document_table(cust, path, key_field="c_custkey")
     return read_document_table(
         spark, path, "c_custkey BIGINT, c_name STRING, c_mktsegment STRING",
@@ -484,7 +483,7 @@ def x_rollup_apply_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     eus = F.unix_micros(F.col("ts").cast("timestamp"))
     keys = ["user_id", "event_type"]
     bucket = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(16))
-    run = f"/tmp/mapr_plugins_rollup_pruned/{uuid.uuid4().hex[:12]}"
+    run = scratch_dir("run", f"rollup_pruned-{uuid.uuid4().hex[:12]}")
     base = incremental_agg_state(
         ev.filter(eus <= F.lit(SCD2_APPLY_CUTOFF_US)), keys, "value"
     )

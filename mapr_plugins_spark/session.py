@@ -17,6 +17,7 @@ higher initial partition count.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +40,17 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
 }
+
+
+def scratch_dir(*parts: str) -> str:
+    """Path ``<tempdir>/mapr_plugins/<parts...>`` under the engine's one
+    scratch root; its parent directory is created. The root follows
+    ``tempfile.gettempdir()``, so ``TMPDIR`` relocates it. Fingerprinted
+    caches (stream staging, ANN indexes, the signature store) live here
+    across runs; per-run directories are removed by their owner."""
+    path = os.path.join(tempfile.gettempdir(), "mapr_plugins", *parts)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return path
 
 
 def get_session(

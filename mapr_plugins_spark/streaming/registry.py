@@ -21,6 +21,7 @@ from mapr_plugins_spark.streaming.replay import (
     as_event_time,
     events_stream,
     run_available_now,
+    run_delta_log,
 )
 
 _US_5MIN = 300_000_000
@@ -283,73 +284,27 @@ def s10_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink fed by a stream (A6 upsert semantics, MapRDBJSONSink.java:67-110,
     with 'error' events as tombstones).
 
-    Each of the (real) micro-batches compacts to one op per key and
-    folds into a versioned parquet state table via ``foreachBatch``:
-    read state(batch-1) → LWW merge on (ts, event_id) recency → write
-    state(batch). The fold is order-independent, so out-of-order file
-    pickup cannot change the result; at scale the same loop writes to a
-    transactional table format instead of versioned directories."""
-    import os
-    import uuid
-
+    Each (real) micro-batch compacts to one op per key, its winner by
+    (ts, event_id) recency, and lands in the delta log
+    (:func:`run_delta_log`). The table is the same LWW fold over the
+    log: LWW is associative and commutative (the latest op of a union is
+    the latest of the per-batch latests), so out-of-order file pickup
+    and batch replay cannot change the result; at scale the same loop
+    writes to a transactional table format."""
     from pyspark.sql import Window
 
-    from mapr_plugins_spark.streaming.replay import (
-        events_stream_chunked,
-        pinned_state_partitions,
-    )
+    from mapr_plugins_spark.streaming.replay import events_stream_chunked
 
-    run = f"/tmp/mapr_plugins_cdc/{uuid.uuid4().hex[:12]}"
-    os.makedirs(run, exist_ok=True)
-    stream = events_stream_chunked(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    n_applied = {"batches": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
+    def latest(df: DataFrame) -> DataFrame:
         rn = F.row_number().over(
             Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
         )
-        compact = batch.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
-        prev = f"{run}/state_{batch_id - 1}"
-        if os.path.exists(prev):
-            state = sess.read.parquet(prev)
-        else:
-            state = sess.createDataFrame([], compact.schema)
-        old, new = state.alias("old"), compact.alias("new")
-        j = old.join(new, "user_id", "full_outer")
-        take_new = F.col("old.event_id").isNull() | (
-            F.col("new.event_id").isNotNull()
-            & (
-                F.struct(F.col("new.ts"), F.col("new.event_id"))
-                > F.struct(F.col("old.ts"), F.col("old.event_id"))
-            )
-        )
-        merged = j.select(
-            "user_id",
-            *[
-                F.when(take_new, F.col(f"new.{c}")).otherwise(F.col(f"old.{c}")).alias(c)
-                for c in ("event_id", "ts", "event_type", "value")
-            ],
-        )
-        merged.write.mode("overwrite").parquet(f"{run}/state_{batch_id}")
-        n_applied["batches"] = max(n_applied["batches"], batch_id + 1)
+        return df.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
 
-    # state-partition pin: see s13 — foreachBatch bodies bypass
-    # run_available_now's sizing, and the LWW merge's full-outer join
-    # otherwise shuffles KB-sized state into the session's full
-    # partition count per micro-batch.
-    with pinned_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert n_applied["batches"] >= 2, "expected multiple incremental micro-batches"
-    final = spark.read.parquet(f"{run}/state_{n_applied['batches'] - 1}")
+    stream = events_stream_chunked(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    final = latest(run_delta_log(stream, latest, "cdc").drop("batch_id"))
     return final.filter(F.col("event_type") != "error").select(
         "user_id", F.col("value").alias("last_value")
     )
@@ -428,30 +383,57 @@ def s11_pyds_kafka_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg, "complete")
 
 
+def _admission_delta(batch: DataFrame) -> DataFrame:
+    """s13's per-batch delta: the batch's band signatures, plus one
+    roster row per document (NULL band/sig) so docs too short to sign
+    are still admitted."""
+    from mapr_plugins_spark.operators.dedup import minhash_band_signatures
+    from mapr_plugins_spark.operators.registry import _BAND_ROWS, _MINHASH_SEEDS
+
+    bands = minhash_band_signatures(
+        batch, "doc_id", "text", k=3, n_hashes=_MINHASH_SEEDS, band_rows=_BAND_ROWS
+    )
+    roster = batch.select(
+        "doc_id",
+        F.lit(None).cast("bigint").alias("band"),
+        F.lit(None).cast("string").alias("sig"),
+    )
+    return bands.unionByName(roster)
+
+
+def _admission_fold(log: DataFrame) -> DataFrame:
+    """s13's fold over its delta log: MIN doc_id per (band, sig)
+    bucket, then admitted ⟺ the doc is the minimum of every one of its
+    buckets (True for docs with no signature)."""
+    bands = log.filter(F.col("band").isNotNull())
+    mins = bands.groupBy("band", "sig").agg(F.min("doc_id").alias("m"))
+    adm = (
+        bands.join(mins, ["band", "sig"])
+        .groupBy("doc_id")
+        .agg(F.expr("bool_and(doc_id = m)").alias("admitted"))
+    )
+    roster = log.filter(F.col("band").isNull()).select("doc_id")
+    return roster.join(adm, "doc_id", "left").select(
+        "doc_id", F.coalesce("admitted", F.lit(True)).alias("admitted")
+    )
+
+
 def s13_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup admission control — the ingest-time form of
     MinHash dedup a 100 TB pipeline actually runs: document waves
     arrive as REAL micro-batches (corpus + injected variants, waves
     ordered by doc_id); each batch computes its band signatures
-    incrementally (row-local, the batch's cost only) and folds them
-    into a persisted signature store keyed (band, sig) holding the
-    minimum arriving doc_id. A document is ADMITTED iff it is the
-    first claimant of EVERY one of its band buckets; docs too short to
-    sign are admitted trivially. Both folds are order-independent
-    (MIN-merge + append), so out-of-order file pickup cannot change
-    the result; admissions are evaluated against the final store.
-    Oracle: the equivalent batch rule — admitted ⟺ min doc_id in every
-    bucket — over the same corpus and the identical portable-hash band
-    pipeline."""
-    import os
-    import uuid
-
-    from mapr_plugins_spark.operators.dedup import minhash_band_signatures
-    from mapr_plugins_spark.operators.registry import _BAND_ROWS, _MINHASH_SEEDS
-    from mapr_plugins_spark.streaming.replay import (
-        df_stream_chunked,
-        pinned_state_partitions,
-    )
+    incrementally (row-local, the batch's cost only) into the delta log
+    (:func:`run_delta_log`), and the signature store is the fold over
+    the log: (band, sig) → minimum arriving doc_id. A document is
+    ADMITTED iff it is the first claimant of EVERY one of its band
+    buckets; docs too short to sign are admitted trivially. MIN is
+    associative and commutative and a replayed batch overwrites its
+    own delta, so neither out-of-order file pickup nor replay can
+    change the result. Oracle: the equivalent batch rule — admitted ⟺
+    min doc_id in every bucket — over the same corpus and the identical
+    portable-hash band pipeline."""
+    from mapr_plugins_spark.streaming.replay import df_stream_chunked
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.unionByName(
@@ -461,59 +443,7 @@ def s13_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stream = df_stream_chunked(corpus, f"{sf_dir}/dedup_corpus", "doc_id", n_chunks=4)
-
-    run = f"/tmp/mapr_plugins_admission/{uuid.uuid4().hex[:12]}"
-    os.makedirs(run, exist_ok=True)
-    n_applied = {"batches": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        bands = minhash_band_signatures(
-            batch, "doc_id", "text", k=3, n_hashes=_MINHASH_SEEDS, band_rows=_BAND_ROWS
-        ).persist()
-        bands.write.mode("append").parquet(f"{run}/bands")
-        batch.select("doc_id").write.mode("append").parquet(f"{run}/roster")
-        mins_new = bands.groupBy("band", "sig").agg(F.min("doc_id").alias("m"))
-        prev = f"{run}/state_{batch_id - 1}"
-        if os.path.exists(prev):
-            state = sess.read.parquet(prev)
-            merged = (
-                state.unionByName(mins_new).groupBy("band", "sig").agg(F.min("m").alias("m"))
-            )
-        else:
-            merged = mins_new
-        merged.write.mode("overwrite").parquet(f"{run}/state_{batch_id}")
-        bands.unpersist()
-        n_applied["batches"] = max(n_applied["batches"], batch_id + 1)
-
-    # The foreachBatch body's shuffles (per-batch bucket-min, state
-    # merge) bypass run_available_now, so until round 14 they ran at
-    # the session's full shuffle-partition count (32+ state files
-    # written and re-read per micro-batch for KB-sized state) — the
-    # foreachBatch keys were the streaming keys the §2.2
-    # source-derived sizing missed, and their noted source bytes
-    # leaked into the next streaming run's queue. Same pin, same
-    # restore contract as run_available_now.
-    with pinned_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert n_applied["batches"] >= 2, "expected multiple incremental micro-batches"
-    mins = spark.read.parquet(f"{run}/state_{n_applied['batches'] - 1}")
-    bands_all = spark.read.parquet(f"{run}/bands")
-    adm = (
-        bands_all.join(mins, ["band", "sig"])
-        .groupBy("doc_id")
-        .agg(F.expr("bool_and(doc_id = m)").alias("admitted"))
-    )
-    roster = spark.read.parquet(f"{run}/roster")
-    return roster.join(adm, "doc_id", "left").select(
-        "doc_id", F.coalesce("admitted", F.lit(True)).alias("admitted")
-    )
+    return _admission_fold(run_delta_log(stream, _admission_delta, "admission"))
 
 
 def s14_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -934,85 +864,37 @@ def s20_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental ROLLUP maintenance — the streaming twin
     of batch ``x_rollup_apply``: each (real) micro-batch reduces to
     its mergeable per-(user, event_type) aggregate state (count,
-    exact DECIMAL sum, min, max) and folds into the persisted state
-    table via ``foreachBatch`` — the classic streaming materialized
-    view. Every component fold is commutative+associative, so batch
-    boundaries and arrival order cannot change the result, and the
-    final state equals the full-log aggregate: the key shares
-    ROLLUP_ORACLE_SQL with the batch twin VERBATIM. State size is
-    bounded by the group count, never the event count."""
-    import shutil
-    import uuid
-
-    from pyspark.errors import AnalysisException
-
+    exact DECIMAL sum, min, max) in the delta log
+    (:func:`run_delta_log`) — the classic streaming materialized view.
+    The view is ``incremental_agg_merge`` over the log; every component
+    fold is commutative+associative, so batch boundaries, arrival order
+    and batch replay cannot change the result, and the final state
+    equals the full-log aggregate: the key shares ROLLUP_ORACLE_SQL
+    with the batch twin VERBATIM. Each delta is bounded by the group
+    count, never the event count."""
     from mapr_plugins_spark.operators.analytics import (
         incremental_agg_merge,
         incremental_agg_state,
     )
-    from mapr_plugins_spark.streaming.replay import (
-        events_stream_chunked,
-        pinned_state_partitions,
-    )
+    from mapr_plugins_spark.streaming.replay import events_stream_chunked
 
-    run = f"/tmp/mapr_plugins_rollup/{uuid.uuid4().hex[:12]}"
     keys = ["user_id", "event_type"]
     stream = events_stream_chunked(spark, sf_dir).select(
         "user_id", "event_type", "value"
     )
-    n_applied = {"batches": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        wave = incremental_agg_state(batch, keys, "value")
-        # prior-state existence resolves through the catalog READ, not
-        # a driver-local os.path probe: on a non-local checkpoint/
-        # storage filesystem (HDFS, S3) an os.path.exists() silently
-        # misses prior state and every batch restarts from zero
-        # (round-5 ADVICE). A failed read on batch 0 is the expected
-        # cold start; any other batch must find its predecessor.
-        try:
-            prev = sess.read.parquet(f"{run}/state_{batch_id - 1}")
-            merged = incremental_agg_merge([prev, wave], keys)
-        except AnalysisException:
-            if batch_id != 0:
-                raise  # lost state is corruption, never a cold start
-            merged = wave
-        merged.write.mode("overwrite").parquet(f"{run}/state_{batch_id}")
-        n_applied["batches"] = max(n_applied["batches"], batch_id + 1)
-
-    # state-partition pin: see s13 — foreachBatch bodies bypass
-    # run_available_now's sizing, and the group-bounded state merge
-    # otherwise shuffles into the session's full partition count per
-    # micro-batch.
-    with pinned_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{run}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert n_applied["batches"] >= 2, "expected multiple incremental micro-batches"
-    final = (
-        spark.read.parquet(f"{run}/state_{n_applied['batches'] - 1}")
-        .select(
-            *keys,
-            "cnt",
-            F.col("sum_dec").cast("double").alias("sum_v"),
-            (
-                F.col("sum_dec").cast("double") / F.col("cnt").cast("double")
-            ).alias("avg_v"),
-            "min_v",
-            "max_v",
-        )
-        # materialize before cleanup: the run directory (per-batch state
-        # + stream checkpoint) must not leak across runs (round-5
-        # ADVICE), and the returned frame must not depend on it
-        .localCheckpoint()
+    log = run_delta_log(
+        stream, lambda batch: incremental_agg_state(batch, keys, "value"), "rollup"
     )
-    shutil.rmtree(run, ignore_errors=True)
-    return final
+    return incremental_agg_merge([log.drop("batch_id")], keys).select(
+        *keys,
+        "cnt",
+        F.col("sum_dec").cast("double").alias("sum_v"),
+        (
+            F.col("sum_dec").cast("double") / F.col("cnt").cast("double")
+        ).alias("avg_v"),
+        "min_v",
+        "max_v",
+    )
 
 
 def s21_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1222,7 +1104,7 @@ def s23_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     # entity-keyed (one state row per user), row-paced fold — same
-    # declaration as s22 (replay.py: _ROW_FOLD_PARTITION_BYTES_CONF)
+    # declaration as s22 (replay.py: _ROW_FOLD_PARTITION_BYTES)
     emitted = run_available_now(pairs, "append", row_paced_fold=True)
     counts = emitted.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_pair")

@@ -10,34 +10,23 @@ micro-batch execution path as Kafka, minus the broker).
 available input (Trigger.AvailableNow — the bounded-reprocess trigger)
 into a memory sink and returns the result as a batch DataFrame, so
 streaming queries can participate in the oracle-differential gate.
+``run_delta_log`` is its ``foreachBatch`` twin for keys whose state is
+a fold over per-batch deltas.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapr_plugins_spark.session import pin_runtime_conf
-
-#: Staged source sizes (bytes) recorded by the stream constructors
-#: since the last ``run_available_now`` — the input-size signal the
-#: state-partition derivation below consumes. Module-level because the
-#: registry functions build their stream and run it within one call;
-#: ``pinned_state_partitions`` (used by ``run_available_now`` AND the
-#: foreachBatch-shaped keys) drains the list. CONTRACT (round-13
-#: ADVICE): build a stream, then run it, one query at a time — every
-#: runner drains the notes of the stream(s) it is about to execute
-#: (several notes per run are fine: a stream-stream join records both
-#: sides; the derivation takes the max). A stream built and then
-#: abandoned without a run would leak its note into the next run's
-#: derivation — perf-only (results are partitioning-independent), and
-#: no in-repo path does it since round 14 wired the foreachBatch keys.
-_PENDING_SOURCE_BYTES: list[int] = []
+from mapr_plugins_spark.session import pin_runtime_conf, scratch_dir
 
 #: Advisory bytes of staged (compressed parquet) replay input per
 #: streaming state partition — the streaming twin of AQE's
@@ -47,17 +36,12 @@ _PENDING_SOURCE_BYTES: list[int] = []
 #: (task launch + Python worker round-trip + state commit, measured
 #: ~75 ms each) per session shuffle partition PER MICRO-BATCH
 #: regardless of data volume. Derivation: partitions =
-#: clamp(ceil(staged_bytes / advisory), 1, defaultParallelism).
-#: The 512 KiB local default is measured, not guessed (round-13 A/B at
-#: sf0.1, 5 stateful keys, best-of-2 each: 32 parts 70.0 s → 8 parts
-#: 28.2 s → 4 parts 21.7 s → 2 parts 32.9 s — fewer instances win
-#: until the Python fold serializes); production deployments with real
-#: state volumes raise it via this conf (uncompressed fold input runs
-#: ~4-8× the parquet bytes, and Python fold throughput per core is the
-#: binding resource, hence a target well below AQE's 64 MB batch
-#: advisory).
-_STATE_PARTITION_BYTES_CONF = "spark.mapr_plugins.stream.statePartitionBytes"
-_STATE_PARTITION_BYTES_DEFAULT = 512 * 1024
+#: clamp(ceil(source_bytes / advisory), 1, defaultParallelism).
+#: 512 KiB is measured, not guessed (round-13 A/B at sf0.1, 5 stateful
+#: keys, best-of-2 each: 32 parts 70.0 s → 8 parts 28.2 s → 4 parts
+#: 21.7 s → 2 parts 32.9 s — fewer instances win until the Python fold
+#: serializes).
+_STATE_PARTITION_BYTES = 512 * 1024
 
 #: Denser advisory for ENTITY-KEYED, ROW-PACED GroupState folds (state
 #: key count ∝ entities in the data, Python fold work ∝ rows — e.g.
@@ -69,56 +53,58 @@ _STATE_PARTITION_BYTES_DEFAULT = 512 * 1024
 #: round-14 interleaved A/B at sf0.1: s22 12.0→8.0 s / s23 11.3→7.1 s
 #: median at 64 KiB, while the bounded-key folds REGRESS there
 #: (s26 6.1→11.2, s18 6.0→7.5, s17 4.1→4.8) — hence a per-operator
-#: declaration, not a family-wide constant. Same clamp to
-#: [1, defaultParallelism]; production raises either conf.
-_ROW_FOLD_PARTITION_BYTES_CONF = "spark.mapr_plugins.stream.rowFoldPartitionBytes"
-_ROW_FOLD_PARTITION_BYTES_DEFAULT = 64 * 1024
+#: declaration, not a family-wide constant. Same clamp.
+_ROW_FOLD_PARTITION_BYTES = 64 * 1024
 
 
-def _note_source_bytes(path: str) -> None:
-    """Record the on-disk size of a staged stream source directory (or
-    single file) for the next ``run_available_now`` call."""
-    total = 0
+def _path_bytes(path: str) -> int:
+    """On-disk size of a staged stream source directory (or single
+    file), following symlinks."""
     if os.path.isdir(path):
-        for entry in os.scandir(path):
-            if entry.is_file(follow_symlinks=True):
-                total += os.stat(entry.path).st_size
-    elif os.path.exists(path):
-        total = os.path.getsize(path)
-    _PENDING_SOURCE_BYTES.append(total)
+        return sum(
+            os.stat(e.path).st_size
+            for e in os.scandir(path)
+            if e.is_file(follow_symlinks=True)
+        )
+    return os.path.getsize(path) if os.path.exists(path) else 0
 
 
-def _state_partitions(spark: SparkSession, row_paced_fold: bool = False) -> int:
-    """Streaming state-partition count derived from the recorded source
-    bytes (see ``_STATE_PARTITION_BYTES_CONF``;
-    ``_ROW_FOLD_PARTITION_BYTES_CONF`` when the operator declares its
-    fold row-paced). Falls back to the session's default parallelism
-    when no source was recorded."""
-    pending, _PENDING_SOURCE_BYTES[:] = list(_PENDING_SOURCE_BYTES), []
+def _source_bytes(stream_df: DataFrame) -> int:
+    """Size of the largest file-source leaf of a streaming query's
+    analyzed plan (a stream-stream join reads two; before analysis a
+    bare ``readStream`` frame is an unresolved source); 0 when it reads
+    no file source (e.g. the ``maprstream`` Python DataSource)."""
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    sizes = [0]
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "StreamingRelation":
+            path = leaf.dataSource().options().get("path")
+            if path.isDefined():
+                sizes.append(_path_bytes(path.get()))
+    return max(sizes)
+
+
+def _state_partitions(
+    spark: SparkSession, source_bytes: int, row_paced_fold: bool = False
+) -> int:
+    """Streaming state-partition count for ``source_bytes`` of input
+    (see ``_STATE_PARTITION_BYTES``; ``_ROW_FOLD_PARTITION_BYTES`` when
+    the operator declares its fold row-paced). Falls back to the
+    session's default parallelism when the size is unknown."""
     par = spark.sparkContext.defaultParallelism
-    if not pending or max(pending) <= 0:
+    if source_bytes <= 0:
         return par
-    conf_key, default = (
-        (_ROW_FOLD_PARTITION_BYTES_CONF, _ROW_FOLD_PARTITION_BYTES_DEFAULT)
-        if row_paced_fold
-        else (_STATE_PARTITION_BYTES_CONF, _STATE_PARTITION_BYTES_DEFAULT)
-    )
-    try:
-        target = int(spark.conf.get(conf_key))
-    except Exception:
-        target = default
-    if target <= 0:
-        target = default
-    n = (max(pending) + target - 1) // target
-    return max(1, min(n, par))
+    target = _ROW_FOLD_PARTITION_BYTES if row_paced_fold else _STATE_PARTITION_BYTES
+    return max(1, min(-(-source_bytes // target), par))
 
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """The file stream source requires a *directory*; the test tables are
-    single read-only files. Stage a per-table symlink directory in /tmp
-    (idempotent, content untouched)."""
+    single read-only files. Stage a per-table symlink directory under
+    the scratch root (idempotent, content untouched)."""
     key = hashlib.md5(f"{sf_dir}/{name}".encode()).hexdigest()[:12]
-    d = f"/tmp/mapr_plugins_stream/{key}"
+    d = scratch_dir("stream", key)
     os.makedirs(d, exist_ok=True)
     link = f"{d}/{name}.parquet"
     if not os.path.lexists(link):
@@ -150,7 +136,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     src = _stream_dir(sf_dir, "events")
-    _note_source_bytes(src)
     raw = spark.readStream.schema(batch_schema).parquet(src)
     ts_type = batch_schema["ts"].dataType
     if isinstance(ts_type, LongType):
@@ -170,12 +155,11 @@ def events_stream_chunked(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -
     which we set ascending, but correctness should not depend on it."""
     pin_runtime_conf(spark)
     key = hashlib.md5(f"{sf_dir}/events/chunks{n_chunks}".encode()).hexdigest()[:12]
-    d = f"/tmp/mapr_plugins_stream/{key}"
+    d = scratch_dir("stream", key)
     staged = f"{d}/_STAGED"
     if not os.path.exists(staged):
         os.makedirs(d, exist_ok=True)
         import glob as _glob
-        import shutil
 
         from mapr_plugins_spark.catalog import table
 
@@ -198,7 +182,6 @@ def events_stream_chunked(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -
             os.utime(f"{d}/chunk{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
         with open(staged, "w") as f:
             f.write("ok")
-    _note_source_bytes(d)
     schema = spark.read.parquet(f"{d}/chunk0.parquet").schema
     return (
         spark.readStream.schema(schema)
@@ -218,14 +201,13 @@ def df_stream_chunked(
     must be order-independent; the staging global sort is test-harness
     scoped."""
     import glob as _glob
-    import shutil
 
     from pyspark.sql import Window
 
     spark = df.sparkSession
     pin_runtime_conf(spark)
     key = hashlib.md5(f"{cache_key}/chunks{n_chunks}".encode()).hexdigest()[:12]
-    d = f"/tmp/mapr_plugins_stream/{key}"
+    d = scratch_dir("stream", key)
     staged = f"{d}/_STAGED"
     if not os.path.exists(staged):
         os.makedirs(d, exist_ok=True)
@@ -247,7 +229,6 @@ def df_stream_chunked(
             os.utime(f"{d}/chunk{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
         with open(staged, "w") as f:
             f.write("ok")
-    _note_source_bytes(d)
     schema = spark.read.parquet(f"{d}/chunk0.parquet").schema
     return (
         spark.readStream.schema(schema)
@@ -257,17 +238,15 @@ def df_stream_chunked(
 
 
 @contextmanager
-def pinned_state_partitions(spark: SparkSession, row_paced_fold: bool = False):
-    """Pin ``spark.sql.shuffle.partitions`` to the source-derived
-    streaming state-partition count for the duration of a streaming
-    run; restore the caller's value after. Drains the pending
-    source-bytes queue — every stream runner (``run_available_now``
-    and the foreachBatch-shaped registry keys) must run inside this,
-    both for the §2.2 sizing and so a constructed-but-differently-run
-    stream cannot leak its staged bytes into an unrelated later run."""
+def pinned_state_partitions(stream_df: DataFrame, row_paced_fold: bool = False):
+    """Pin ``spark.sql.shuffle.partitions`` to the state-partition count
+    derived from ``stream_df``'s own file sources for the duration of
+    its run; restore the caller's value after."""
+    spark = stream_df.sparkSession
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(_state_partitions(spark, row_paced_fold)))
+    n = _state_partitions(spark, _source_bytes(stream_df), row_paced_fold)
+    spark.conf.set(key, str(n))
     try:
         yield
     finally:
@@ -285,14 +264,14 @@ def run_available_now(
     Streaming disables AQE, so the state store materializes EVERY
     shuffle partition; on a host session left at the 200 default that is
     ~200 state-store instances per stateful op for test-sized data. Pin
-    the partition count to one derived from the staged source bytes
-    (see ``_STATE_PARTITION_BYTES_CONF``), restore after — results are
+    the partition count to one derived from the query's source bytes
+    (see ``_STATE_PARTITION_BYTES``), restore after — results are
     partitioning-independent, only the state layout changes.
     ``row_paced_fold=True`` declares the query's stateful fold
-    entity-keyed and row-paced (see ``_ROW_FOLD_PARTITION_BYTES_CONF``).
+    entity-keyed and row-paced (see ``_ROW_FOLD_PARTITION_BYTES``).
     """
     spark = stream_df.sparkSession
-    with pinned_state_partitions(spark, row_paced_fold):
+    with pinned_state_partitions(stream_df, row_paced_fold):
         name = f"snap_{uuid.uuid4().hex[:12]}"
         q = (
             stream_df.writeStream.format("memory")
@@ -303,3 +282,58 @@ def run_available_now(
         )
         q.awaitTermination()
     return spark.table(name)
+
+
+def delta_log_writer(
+    run: str, delta: Callable[[DataFrame], DataFrame]
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body of :func:`run_delta_log`: write
+    ``delta(batch)`` to ``<run>/deltas/batch_id=<id>`` with mode
+    overwrite, so a replayed batch id replaces its own delta and never
+    doubles it."""
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        delta(batch).write.mode("overwrite").parquet(f"{run}/deltas/batch_id={batch_id}")
+
+    return write
+
+
+def read_delta_log(spark: SparkSession, run: str) -> DataFrame:
+    """Every delta of ``run`` (with its ``batch_id``), materialized so
+    the result outlives the run directory."""
+    return spark.read.parquet(f"{run}/deltas").localCheckpoint()
+
+
+def run_delta_log(
+    stream_df: DataFrame, delta: Callable[[DataFrame], DataFrame], name: str
+) -> DataFrame:
+    """Run a stream to completion under ``foreachBatch``, logging each
+    micro-batch's ``delta(batch)``, and return the delta log as a batch
+    DataFrame. No batch reads an earlier one: a key's state is its
+    associative, commutative fold over the log, so arrival order and
+    batch boundaries cannot change it, and a replayed batch id
+    overwrites its own delta. The per-run directory (deltas + stream
+    checkpoint) is removed before returning. Sized like
+    :func:`run_available_now`."""
+    spark = stream_df.sparkSession
+    run = scratch_dir("run", f"{name}-{uuid.uuid4().hex[:12]}")
+    write = delta_log_writer(run, delta)
+    applied: set[int] = set()
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        write(batch, batch_id)
+        applied.add(batch_id)
+
+    try:
+        with pinned_state_partitions(stream_df):
+            q = (
+                stream_df.writeStream.foreachBatch(apply_batch)
+                .option("checkpointLocation", f"{run}/ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        assert len(applied) >= 2, "expected multiple incremental micro-batches"
+        return read_delta_log(spark, run)
+    finally:
+        shutil.rmtree(run, ignore_errors=True)

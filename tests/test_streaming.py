@@ -467,41 +467,20 @@ def test_stream_psi_equals_batch(spark, sf_dir):
 
 def test_state_partitions_derive_from_source_bytes(spark):
     """The replay harness sizes streaming state partitions from the
-    staged source bytes (guide §2.2: partitions sized to data, not to
+    query's source bytes (guide §2.2: partitions sized to data, not to
     the core count): ceil(bytes/advisory) clamped to [1, parallelism],
-    conf-overridable, queue drained per run, parallelism fallback when
-    no source was recorded."""
+    parallelism fallback when the size is unknown."""
     from mapr_plugins_spark.streaming import replay as R
 
     par = spark.sparkContext.defaultParallelism
-    # no recorded source → fall back to session parallelism
-    R._PENDING_SOURCE_BYTES.clear()
-    assert R._state_partitions(spark) == par
-
-    # 2 MB at the 512 KiB default advisory → 4 partitions, queue drained
-    R._PENDING_SOURCE_BYTES.append(2 * 1024 * 1024)
-    assert R._state_partitions(spark) == min(4, par)
-    assert R._PENDING_SOURCE_BYTES == []
-
-    # several sources recorded → sized by the largest
-    R._PENDING_SOURCE_BYTES.extend([1, 512 * 1024 + 1])
-    assert R._state_partitions(spark) == min(2, par)
-
+    # no file source (size unknown) → fall back to session parallelism
+    assert R._state_partitions(spark, 0) == par
+    # 2 MB at the 512 KiB advisory → 4 partitions
+    assert R._state_partitions(spark, 2 * 1024 * 1024) == min(4, par)
+    # one byte over the advisory rounds up
+    assert R._state_partitions(spark, 512 * 1024 + 1) == min(2, par)
     # clamped above by parallelism
-    R._PENDING_SOURCE_BYTES.append(10**12)
-    assert R._state_partitions(spark) == par
-
-    # conf override wins (and is restored)
-    old = spark.conf.get(R._STATE_PARTITION_BYTES_CONF, None)
-    try:
-        spark.conf.set(R._STATE_PARTITION_BYTES_CONF, str(1024 * 1024))
-        R._PENDING_SOURCE_BYTES.append(2 * 1024 * 1024)
-        assert R._state_partitions(spark) == min(2, par)
-    finally:
-        if old is None:
-            spark.conf.unset(R._STATE_PARTITION_BYTES_CONF)
-        else:
-            spark.conf.set(R._STATE_PARTITION_BYTES_CONF, old)
+    assert R._state_partitions(spark, 10**12) == par
 
 
 def test_row_paced_fold_partition_advisory(spark):
@@ -510,30 +489,115 @@ def test_row_paced_fold_partition_advisory(spark):
     binding resource is Python fold CPU across partitions, not
     state-store instances (round-14 interleaved A/B: s22 12.0→8.0 s,
     s23 11.3→7.1 s at sf0.1, while bounded-key sketch folds regress at
-    that density). Same clamp and conf-override contract as the
-    default advisory."""
+    that density). Same clamp as the default advisory."""
     from mapr_plugins_spark.streaming import replay as R
 
     par = spark.sparkContext.defaultParallelism
     # row-paced folds: 256 KiB at the 64 KiB advisory → 4 partitions
-    R._PENDING_SOURCE_BYTES.clear()
-    R._PENDING_SOURCE_BYTES.append(256 * 1024)
-    assert R._state_partitions(spark, row_paced_fold=True) == min(4, par)
-    assert R._PENDING_SOURCE_BYTES == []
+    assert R._state_partitions(spark, 256 * 1024, row_paced_fold=True) == min(4, par)
     # bounded-key folds (the default) keep the 512 KiB density
-    R._PENDING_SOURCE_BYTES.append(256 * 1024)
-    assert R._state_partitions(spark) == 1
-    # conf override wins for the row-paced advisory too
-    old = spark.conf.get(R._ROW_FOLD_PARTITION_BYTES_CONF, None)
-    try:
-        spark.conf.set(R._ROW_FOLD_PARTITION_BYTES_CONF, str(128 * 1024))
-        R._PENDING_SOURCE_BYTES.append(256 * 1024)
-        assert R._state_partitions(spark, row_paced_fold=True) == min(2, par)
-    finally:
-        if old is None:
-            spark.conf.unset(R._ROW_FOLD_PARTITION_BYTES_CONF)
-        else:
-            spark.conf.set(R._ROW_FOLD_PARTITION_BYTES_CONF, old)
+    assert R._state_partitions(spark, 256 * 1024) == 1
+    assert R._state_partitions(spark, 10**12, row_paced_fold=True) == par
+
+
+def test_source_bytes_read_from_the_query_plan(spark, sf_dir):
+    """The size comes from the file-source leaves of the query being
+    run (the largest, for a stream-stream union), following the staged
+    symlinks; a non-file source has no size."""
+    import os
+
+    from mapr_plugins_spark.sources.pyds import register
+    from mapr_plugins_spark.streaming import replay as R
+
+    ev = R.events_stream(spark, sf_dir)
+    want = os.path.getsize(f"{sf_dir}/events.parquet")
+    assert R._source_bytes(ev.select("event_id")) == want
+    assert R._source_bytes(ev.unionByName(R.events_stream(spark, sf_dir))) == want
+    register(spark)
+    raw = (
+        spark.readStream.format("maprstream")
+        .option("path", f"{sf_dir}/events.parquet")
+        .option("topic", "events")
+        .load()
+    )
+    assert R._source_bytes(raw) == 0
+
+
+def test_unrun_stream_does_not_size_the_next_run(spark, sf_dir, tmp_path, monkeypatch):
+    """A stream that is built but never run leaves no trace in the next
+    run's sizing: each run sizes itself from its own query plan."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from mapr_plugins_spark.streaming import replay as R
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    key = "spark.sql.shuffle.partitions"
+
+    def pinned(stream):
+        with R.pinned_state_partitions(stream):
+            return int(spark.conf.get(key))
+
+    small = R.events_stream(spark, sf_dir).select("event_id")
+    want = pinned(small)
+    big = R.df_stream_chunked(
+        spark.range(40000).select(F.sha2(F.col("id").cast("string"), 256).alias("h")),
+        "unrun",
+        "h",
+    )
+    if spark.sparkContext.defaultParallelism > want:
+        assert pinned(big) > want  # the abandoned stream would size differently
+    assert pinned(small) == want
+
+
+def test_delta_log_replayed_batch_is_idempotent(spark, sf_dir, tmp_path):
+    """The engine may hand foreachBatch the same batch id again after a
+    restart; the delta log overwrites that batch's delta, so the fold
+    over the log is unchanged (an appending log would double s13's
+    roster)."""
+    from pyspark.sql import functions as F
+
+    from mapr_plugins_spark.catalog import table
+    from mapr_plugins_spark.streaming import replay as R
+    from mapr_plugins_spark.streaming.registry import _admission_delta, _admission_fold
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    waves = [docs.filter(F.col("doc_id") % 2 == i) for i in (0, 1)]
+    run = str(tmp_path)
+    write = R.delta_log_writer(run, _admission_delta)
+    for i, wave in enumerate(waves):
+        write(wave, i)
+
+    def folded():
+        return sorted(_admission_fold(R.read_delta_log(spark, run)).collect())
+
+    once = folded()
+    assert len(once) == docs.count()
+    write(waves[1], 1)
+    assert folded() == once
+
+
+def test_delta_log_keys_leave_no_run_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """s10, s13, s20 (and the pruned rollup) remove their per-run
+    directories before returning; only fingerprinted caches stay under
+    the scratch root, which follows ``tempfile.gettempdir()``."""
+    import os
+    import tempfile
+
+    from mapr_plugins_spark.operators.registry import x_rollup_apply_pruned
+    from mapr_plugins_spark.session import scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for fn in (
+        SR.s10_cdc_merge_upsert,
+        SR.s13_stream_dedup_admission,
+        SR.s20_stream_rollup,
+        x_rollup_apply_pruned,
+    ):
+        assert fn(spark, sf_dir).count() > 0
+    assert scratch_dir("run").startswith(str(tmp_path))
+    assert os.listdir(scratch_dir("run")) == []
 
 
 def test_run_available_now_restores_shuffle_partitions(spark, sf_dir):
