@@ -106,8 +106,13 @@ PRIORITY: tuple[str, ...] = (
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, emitted in
-    PRIORITY order first so any graded prefix covers the whole engine."""
+    PRIORITY order first so any graded prefix covers the whole engine.
+
+    Every family registers its keys by the one ``discovery`` rule (a
+    ``q<n>_``/``x_``/``s<n>_`` function defined in the family module);
+    a key defined in two families raises instead of shadowing."""
     from mapr_plugins_spark import queries as Q
+    from mapr_plugins_spark.discovery import family_queries, merge_disjoint
 
     # No try/except here: an unimportable family must fail LOUDLY with
     # its real cause, not silently shrink the registry (a silent except
@@ -117,15 +122,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from mapr_plugins_spark.sources.registry import format_queries
     from mapr_plugins_spark.streaming.registry import streaming_queries
 
-    reg: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, fn in vars(Q).items():
-        if callable(fn) and name.startswith("q") and getattr(fn, "__module__", "").endswith(
-            "queries"
-        ):
-            reg[name] = fn
-    reg.update(extension_queries())
-    reg.update(streaming_queries())
-    reg.update(format_queries())
+    reg = merge_disjoint(
+        (family_queries(Q), extension_queries(), streaming_queries(), format_queries()),
+        "query",
+    )
     missing = [k for k in PRIORITY if k not in reg]
     if missing:  # a priority key must never silently vanish
         raise KeyError(f"PRIORITY keys missing from registry: {missing}")
@@ -135,15 +135,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query key (omitted keys → rows-only check)."""
+    """DuckDB-equivalent SQL per query key (omitted keys → rows-only check).
+    An oracle for a key no family registers raises: it would grade nothing."""
+    from mapr_plugins_spark.discovery import merge_disjoint
     from mapr_plugins_spark.oracles import RELATIONAL_ORACLES
 
     from mapr_plugins_spark.operators.registry import extension_oracles
     from mapr_plugins_spark.sources.registry import format_oracles
     from mapr_plugins_spark.streaming.registry import streaming_oracles
 
-    out = dict(RELATIONAL_ORACLES)
-    out.update(extension_oracles())
-    out.update(streaming_oracles())
-    out.update(format_oracles())
+    out = merge_disjoint(
+        (RELATIONAL_ORACLES, extension_oracles(), streaming_oracles(), format_oracles()),
+        "oracle",
+    )
+    orphans = sorted(out.keys() - queries().keys())
+    if orphans:
+        raise KeyError(f"oracles for unregistered query keys: {orphans}")
     return out

@@ -1,26 +1,17 @@
 """Event/statistics analytics extension queries + DuckDB oracles.
 
-Mechanically split out of operators/registry.py (round 13) — same
-queries, same oracles; the registry module remains the façade that
-aggregates every family.
+Every ``q<n>_``/``x_`` function defined here is a registry key (the
+``mapr_plugins_spark.discovery`` rule); ``oracles()`` maps keys to
+their DuckDB SQL.
 """
 
 from __future__ import annotations
-from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from mapr_plugins_spark.catalog import table as _t
-from mapr_plugins_spark.functions.portable_hash import (
-    hex15_to_bigint_sql,
-    seeded_hash60_sql,
-)
+from mapr_plugins_spark.functions.portable_hash import seeded_hash60_sql
 from mapr_plugins_spark.operators.sampling import poisson_weight_sql
-from mapr_plugins_spark.operators import dedup as D
-from mapr_plugins_spark.operators import joins as J
-from mapr_plugins_spark.operators import multimodal as M
-from mapr_plugins_spark.operators import similarity as S
 from mapr_plugins_spark.operators import text as X
-from mapr_plugins_spark.plans.partitioning import fan_out
 from mapr_plugins_spark.operators.reg_common import _EN_STOP, _TOKS_SQL
 
 

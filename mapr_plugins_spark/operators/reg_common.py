@@ -1,26 +1,15 @@
 """Shared fragments for the per-family extension registries: the dedup corpus, tokenization SQL, portable constants, and cross-family oracle helpers.
 
-Mechanically split out of operators/registry.py (round 13) — same
-queries, same oracles; the registry module remains the façade that
-aggregates every family.
+Imported by the family modules and by ``streaming/registry.py``; it
+defines no registry key.
 """
 
 from __future__ import annotations
-from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from mapr_plugins_spark.catalog import table as _t
-from mapr_plugins_spark.functions.portable_hash import (
-    hex15_to_bigint_sql,
-    seeded_hash60_sql,
-)
-from mapr_plugins_spark.operators.sampling import poisson_weight_sql
-from mapr_plugins_spark.operators import dedup as D
-from mapr_plugins_spark.operators import joins as J
-from mapr_plugins_spark.operators import multimodal as M
-from mapr_plugins_spark.operators import similarity as S
+from mapr_plugins_spark.functions.portable_hash import hex15_to_bigint_sql
 from mapr_plugins_spark.operators import text as X
-from mapr_plugins_spark.plans.partitioning import fan_out
 
 # ---------------------------------------------------------------------------
 # shared fragments

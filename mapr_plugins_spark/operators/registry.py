@@ -5,12 +5,9 @@ declared surface (SURVEY §2 north-star rows). Queries without an oracle
 entry (LSH ANN, mapInPandas feature extraction) get the driver's
 rows-only check and are additionally pinned by unit tests.
 
-Round 13: the query/oracle bodies were split MECHANICALLY into
-per-family modules (``reg_ann`` ``reg_dedup`` ``reg_text``
-``reg_curation`` ``reg_analytics`` ``reg_sketch_graph`` ``reg_relops``
-over shared ``reg_common``) — same keys, same oracle SQL; this module
-remains the façade that re-exports every name (so existing imports
-keep working verbatim) and aggregates the per-family registries.
+The query and oracle bodies live in per-family modules over shared
+``reg_common``; this module only aggregates them with the
+``discovery`` rule.
 """
 
 from __future__ import annotations
@@ -19,485 +16,34 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mapr_plugins_spark.operators.reg_common import (  # noqa: F401
-    SCD2_APPLY_CUTOFF_US,
-    _BAND_ROWS,
-    _CORPUS_SQL,
-    _EN_STOP,
-    _MINHASH_SEEDS,
-    _TOKS_SQL,
-    _clusters_oracle,
-    _data_fingerprint,
-    _dedup_corpus,
-    _ensure_staged,
-    _int_d2_sql,
-    _langid_sql,
-    _minhash_pairs_ctes,
-    _quality_sql,
-)
-from mapr_plugins_spark.operators.reg_ann import (  # noqa: F401
-    _INDEX_CODE_VERSION,
-    _ivf_index_dir,
-    _ivf_probe_batch,
-    _ivfpq_index_dir,
-    _ivfpq_oracle,
-    _jl_oracle,
-    _jl_rerank_oracle,
-    _kcenter_oracle,
-    _kmeans_oracle,
-    _lsh_index_dir,
-    _lsh_oracle,
-    _matryoshka_oracle,
-    _mmr_oracle,
-    _pq_ctes,
-    _pq_index_dir,
-    _pq_rerank_oracle,
-    _pq_topk_oracle,
-    _with_recall_guard,
-    q24_ann_topk,
-    x_ann_ivf_batch,
-    x_ann_ivf_batch_codebook,
-    x_ann_ivf_batch_prod,
-    x_ann_ivf_topk,
-    x_ann_ivfpq_indexed,
-    x_ann_ivfpq_topk,
-    x_ann_jl_rerank,
-    x_ann_lsh_indexed,
-    x_ann_lsh_topk,
-    x_ann_pq_rerank,
-    x_ann_pq_topk,
-    x_embed_jl_project,
-    x_embed_normalize,
-    x_embed_pq_encode,
-    x_embed_quantize,
-    x_hard_negatives,
-    x_kcenter_select,
-    x_kmeans_lloyd,
-    x_matryoshka_eval,
-    x_mmr_rerank,
-    x_retrieval_metrics,
-)
-from mapr_plugins_spark.operators.reg_dedup import (  # noqa: F401
-    _SIMHASH_BITS,
-    _blocking_recall_oracle,
-    _canonical_oracle,
-    _cdc_chunk_oracle,
-    _containment_oracle,
-    _fuzzy_name_pairs,
-    _golden_record_oracle,
-    _minhash_oracle,
-    _ngram_jaccard_oracle,
-    _sigstore_dir,
-    _simhash_oracle,
-    _substr_dedup_oracle,
-    _substr_hits_ctes,
-    _substr_strip_oracle,
-    _two_level_cell_ctes,
-    _warc_ingest_oracle,
-    q22_exact_dedup,
-    x_blocking_recall,
-    x_cdc_chunk_dedup,
-    x_cdc_chunk_dedup_capped,
-    x_decontaminate,
-    x_dedup_canonical,
-    x_dedup_containment,
-    x_dedup_embcos,
-    x_dedup_incremental,
-    x_dedup_incremental_indexed,
-    x_dedup_minhash_pairs,
-    x_dedup_ngram_jaccard,
-    x_dedup_simhash,
-    x_fuzzy_join_capped,
-    x_fuzzy_join_levenshtein,
-    x_record_linkage,
-    x_golden_record,
-    x_minhash_clusters,
-    x_semantic_dedup,
-    x_semantic_dedup_codebook,
-    x_semantic_dedup_trained,
-    x_setsim_join,
-    x_snapshot_diff,
-    x_sorted_neighborhood,
-    x_substr_dedup,
-    x_substr_strip,
-    x_url_canonical_dedup,
-    x_warc_ingest,
-)
-from mapr_plugins_spark.operators.reg_text import (  # noqa: F401
-    _BM25_B,
-    _BM25_K1,
-    _BM25_QUERY,
-    _CANON_DUCK,
-    _LM_SCORE_CTES,
-    _LM_SCORE_ORACLE,
-    _PII_INJECT_SQL,
-    _bm25_ctes,
-    _bm25_scores,
-    _bpe_oracle,
-    _bpe_train_oracle,
-    _fertility_oracle,
-    _langid_oracle,
-    _pii_redact_oracle,
-    _with_injected_pii,
-    q23_text_terms,
-    x_bm25,
-    x_bpe_encode,
-    x_bpe_encode_fast,
-    x_bpe_train,
-    x_bpe_train_collected,
-    x_ccnet_buckets,
-    x_gopher_rules,
-    x_inverted_index,
-    x_lm_score,
-    x_mojibake_detect,
-    x_pmi_collocations,
-    x_rrf_fusion,
-    x_text_diversity,
-    x_text_fingerprint,
-    x_text_langid,
-    x_text_nfc_normalize,
-    x_text_pii_redact,
-    x_text_quality,
-    x_text_repetition,
-    x_text_tokens,
-    x_tfidf,
-    x_tokenizer_fertility,
-)
-from mapr_plugins_spark.operators.reg_curation import (  # noqa: F401
-    TOKEN_BUDGET_ORACLE_SQL,
-    _chunk_oracle,
-    _curate_oracle,
-    _pack_oracle,
-    _training_mix_oracle,
-    _wave_report_oracle,
-    x_curate,
-    x_doc_chunk,
-    x_domain_mix,
-    x_dsir_select,
-    x_epoch_shuffle,
-    x_feature_bins,
-    x_feature_hashing,
-    x_group_split,
-    x_hash_sample,
-    x_incremental_novelty,
-    x_length_profile,
-    x_ngram_novelty,
-    x_pack_sequences,
-    x_rare_collapse,
-    x_split_assign,
-    x_stratified_sample,
-    x_target_encode,
-    x_temperature_mix,
-    x_token_budget_fill,
-    x_training_mix,
-    x_vocab_encode,
-    x_wave_ingest_report,
-    x_weighted_sample,
-)
-from mapr_plugins_spark.operators.reg_analytics import (  # noqa: F401
-    DRIFT_CHI2_ORACLE_SQL,
-    HOLT_TREND_ORACLE_SQL,
-    MARKOV_ORACLE_SQL,
-    ZSCORE_ORACLE_SQL,
-    _ab_ttest_oracle,
-    _benford_oracle,
-    _events_ntz,
-    _holt_winters_oracle,
-    _lr_scored_labeled,
-    _lr_scored_sql,
-    _psi_oracle,
-    x_ab_ttest,
-    x_assoc_rules,
-    x_attribution,
-    x_benford_digits,
-    x_bootstrap_ci,
-    x_calibration_bins,
-    x_churn_label,
-    x_classifier_auc,
-    x_cohort_retention,
-    x_dq_expectations,
-    x_dq_profile,
-    x_drift_chi2,
-    x_ewma,
-    x_funnel,
-    x_gap_fill,
-    x_holt_trend,
-    x_holt_winters,
-    x_k_anonymity,
-    x_ks_drift,
-    x_mad_outliers,
-    x_markov_transitions,
-    x_psi_drift,
-    x_quality_lr_score,
-    x_ref_integrity,
-    x_weighted_median,
-    x_winsorize,
-    x_zscore_anomaly,
-)
-from mapr_plugins_spark.operators.reg_sketch_graph import (  # noqa: F401
-    _cms_oracle,
-    _copurchase_edges,
-    _hll_portable_oracle,
-    _hll_setops_oracle,
-    _join_card_oracle,
-    _kcore_oracle,
-    _pagerank_oracle,
-    _triangle_estimate_oracle,
-    x_bloom_semi_join,
-    x_graph_components,
-    x_graph_kcore,
-    x_heavy_hitters,
-    x_join_cardinality,
-    x_pagerank,
-    x_sketch_cms,
-    x_sketch_hll,
-    x_sketch_hll_portable,
-    x_sketch_hll_setops,
-    x_sketch_merge,
-    x_sketch_quantile,
-    x_triangle_count,
-    x_triangle_estimate,
-    x_triangle_estimate_prod,
-)
-from mapr_plugins_spark.operators.reg_relops import (  # noqa: F401
-    ROLLUP_ORACLE_SQL,
-    _MM_FEATURES_SQL,
-    _SCD2_BUILD_ORACLE,
-    _zorder_terms,
-    x_asof_forward,
-    x_asof_join,
-    x_asof_tolerance,
-    x_cogroup_merge,
-    x_delete_propagate,
-    x_doc_sink_roundtrip,
-    x_hypertable_rollup,
-    x_interval_merge,
-    x_merge_upsert,
-    x_mm_features,
-    x_mm_features_arrow,
-    x_mm_frames,
-    x_mm_meta,
-    x_mm_png_header,
-    x_mm_resize,
-    x_mm_sniff,
-    x_mm_wav_header,
-    x_mm_wav_pcm,
-    x_overlap_join,
-    x_rollup_apply,
-    x_rollup_apply_pruned,
-    x_row_index,
-    x_salted_join,
-    x_scd2_apply,
-    x_scd2_build,
-    x_scd2_lookup,
-    x_skipping_stats,
-    x_spatial_join,
-    x_topk_per_group,
-    x_zorder_key,
+from mapr_plugins_spark.discovery import family_queries, merge_disjoint
+from mapr_plugins_spark.operators import (
+    reg_analytics,
+    reg_ann,
+    reg_curation,
+    reg_dedup,
+    reg_relops,
+    reg_sketch_graph,
+    reg_text,
 )
 
-
-_FAMILY_ORACLES = (
-    "ann",
-    "dedup",
-    "text",
-    "curation",
-    "analytics",
-    "sketch_graph",
-    "relops",
+_FAMILIES = (
+    reg_ann,
+    reg_dedup,
+    reg_text,
+    reg_curation,
+    reg_analytics,
+    reg_sketch_graph,
+    reg_relops,
 )
-
-
 
 
 def extension_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        fn.__name__: fn
-        for fn in (
-            q22_exact_dedup,
-            q23_text_terms,
-            q24_ann_topk,
-            x_ann_lsh_topk,
-            x_ann_ivf_topk,
-            x_ann_ivf_batch,
-            x_ann_ivf_batch_prod,
-            x_ann_ivf_batch_codebook,
-            x_ann_lsh_indexed,
-            x_hard_negatives,
-            x_mmr_rerank,
-            x_kcenter_select,
-            x_kmeans_lloyd,
-            x_dedup_minhash_pairs,
-            x_dedup_ngram_jaccard,
-            x_dedup_containment,
-            x_setsim_join,
-            x_rollup_apply_pruned,
-            x_substr_dedup,
-            x_substr_strip,
-            x_warc_ingest,
-            x_dedup_simhash,
-            x_dedup_embcos,
-            x_dedup_incremental,
-            x_dedup_incremental_indexed,
-            x_semantic_dedup,
-            x_semantic_dedup_trained,
-            x_semantic_dedup_codebook,
-            x_cdc_chunk_dedup,
-            x_cdc_chunk_dedup_capped,
-            x_retrieval_metrics,
-            x_pagerank,
-            x_hypertable_rollup,
-            x_split_assign,
-            x_hash_sample,
-            x_sketch_hll,
-            x_sketch_hll_portable,
-            x_sketch_hll_setops,
-            x_sketch_quantile,
-            x_heavy_hitters,
-            x_sketch_merge,
-            x_join_cardinality,
-            x_triangle_count,
-            x_triangle_estimate,
-            x_triangle_estimate_prod,
-            x_graph_kcore,
-            x_scd2_lookup,
-            x_scd2_apply,
-            x_rollup_apply,
-            x_dq_expectations,
-            x_quality_lr_score,
-            x_mad_outliers,
-            x_k_anonymity,
-            x_text_langid,
-            x_text_quality,
-            x_text_tokens,
-            x_text_fingerprint,
-            x_text_pii_redact,
-            x_text_repetition,
-            x_row_index,
-            x_interval_merge,
-            x_minhash_clusters,
-            x_dedup_canonical,
-            x_blocking_recall,
-            x_text_diversity,
-            x_url_canonical_dedup,
-            x_weighted_sample,
-            x_domain_mix,
-            x_temperature_mix,
-            x_bm25,
-            x_rrf_fusion,
-            x_fuzzy_join_levenshtein,
-            x_fuzzy_join_capped,
-            x_record_linkage,
-            x_snapshot_diff,
-            x_doc_sink_roundtrip,
-            x_salted_join,
-            x_ewma,
-            x_zscore_anomaly,
-            x_holt_winters,
-            x_benford_digits,
-            x_classifier_auc,
-            x_calibration_bins,
-            x_markov_transitions,
-            x_churn_label,
-            x_weighted_median,
-            x_assoc_rules,
-            x_holt_trend,
-            x_bootstrap_ci,
-            x_sorted_neighborhood,
-            x_golden_record,
-            x_skipping_stats,
-            x_attribution,
-            x_dq_profile,
-            x_ref_integrity,
-            x_topk_per_group,
-            x_embed_normalize,
-            x_embed_quantize,
-            x_embed_jl_project,
-            x_ann_jl_rerank,
-            x_zorder_key,
-            x_inverted_index,
-            x_sketch_cms,
-            x_bloom_semi_join,
-            x_doc_chunk,
-            x_pack_sequences,
-            x_tfidf,
-            x_feature_hashing,
-            x_lm_score,
-            x_ccnet_buckets,
-            x_decontaminate,
-            x_merge_upsert,
-            x_delete_propagate,
-            x_mojibake_detect,
-            x_overlap_join,
-            x_vocab_encode,
-            x_gap_fill,
-            x_funnel,
-            x_cohort_retention,
-            x_stratified_sample,
-            x_asof_join,
-            x_asof_forward,
-            x_asof_tolerance,
-            x_mm_meta,
-            x_mm_features,
-            x_mm_features_arrow,
-            x_cogroup_merge,
-            x_mm_resize,
-            x_mm_frames,
-            x_curate,
-            x_training_mix,
-            x_embed_pq_encode,
-            x_ann_pq_topk,
-            x_scd2_build,
-            x_text_nfc_normalize,
-            x_group_split,
-            x_bpe_encode,
-            x_tokenizer_fertility,
-            x_length_profile,
-            x_bpe_encode_fast,
-            x_ann_ivfpq_topk,
-            x_ann_ivfpq_indexed,
-            x_winsorize,
-            x_mm_png_header,
-            x_ann_pq_rerank,
-            x_gopher_rules,
-            x_drift_chi2,
-            x_ks_drift,
-            x_rare_collapse,
-            x_psi_drift,
-            x_ab_ttest,
-            x_ngram_novelty,
-            x_incremental_novelty,
-            x_wave_ingest_report,
-            x_token_budget_fill,
-            x_matryoshka_eval,
-            x_mm_wav_header,
-            x_mm_wav_pcm,
-            x_mm_sniff,
-            x_epoch_shuffle,
-            x_dsir_select,
-            x_spatial_join,
-            x_graph_components,
-            x_pmi_collocations,
-            x_bpe_train,
-            x_bpe_train_collected,
-            x_target_encode,
-            x_feature_bins,
-        )
-    }
+    return merge_disjoint((family_queries(m) for m in _FAMILIES), "query")
 
 
 def extension_oracles() -> dict[str, str]:
-    """Aggregate the per-family oracle dicts (split round 13). Key sets
-    must stay disjoint — a duplicate key would silently shadow a graded
-    oracle, so it fails loudly instead."""
-    import importlib
-
-    out: dict[str, str] = {}
-    for fam in _FAMILY_ORACLES:
-        mod = importlib.import_module(f"mapr_plugins_spark.operators.reg_{fam}")
-        fam_oracles = mod.oracles()
-        dup = set(out) & set(fam_oracles)
-        if dup:
-            raise KeyError(f"duplicate oracle keys across family modules: {sorted(dup)}")
-        out.update(fam_oracles)
-    return out
+    """Aggregate the per-family oracle dicts. Key sets must stay
+    disjoint — a duplicate key would silently shadow a graded oracle,
+    so it fails loudly instead."""
+    return merge_disjoint((m.oracles() for m in _FAMILIES), "oracle")

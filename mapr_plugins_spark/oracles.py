@@ -1,8 +1,10 @@
 """DuckDB oracle SQL for the declared query set.
 
-One entry per key in :mod:`mapr_plugins_spark.queries` (and the
-extension/streaming registries). The driver runs these on the same
-parquet tables and hash-compares against the Spark results, so:
+One entry per key in :mod:`mapr_plugins_spark.queries`; the extension,
+streaming and format families keep their oracles beside their queries
+(``oracles()``/``*_oracles()`` in each family module). The driver runs
+these on the same parquet tables and hash-compares against the Spark
+results, so:
 
 * every computed column is aliased identically to the Spark side;
 * integer-typed outputs are cast to the width Spark produces

@@ -51,6 +51,36 @@ _KEY_TYPES: tuple[type, ...] = (
 )
 
 
+def _check_fields(fields, key_field: str, strict: bool, declared: bool) -> None:
+    """The key-present, key-type and (strict) type-lattice checks, over
+    either the sink's declared output schema or a frame's own schema;
+    ``declared`` only changes how the error messages name the schema."""
+    names = {f.name for f in fields}
+    if key_field not in names:
+        where = "declared schema" if declared else "schema"
+        raise ValueError(f"key field {key_field!r} not in {where} {sorted(names)}")
+    for field in fields:
+        dt = field.dataType
+        if field.name == key_field and not isinstance(dt, _KEY_TYPES):
+            raise ValueError(
+                f"key field {key_field!r} has unsupported key type {dt.simpleString()}"
+            )
+        if not strict:
+            continue
+        ok = isinstance(dt, DOC_SINK_SUPPORTED_TYPES) or (
+            isinstance(dt, T.ArrayType) and isinstance(dt.elementType, DOC_SINK_SUPPORTED_TYPES)
+        )
+        if not ok:
+            what, mode = (
+                ("declared field", "reference-compatible strict mode")
+                if declared
+                else ("field", "reference-compatible strict mode; pass strict=False to allow")
+            )
+            raise ValueError(
+                f"unsupported type {dt.simpleString()} for {what} {field.name!r} ({mode})"
+            )
+
+
 def parse_declared_schema(schema_ddl: str, key_field: str, strict: bool = True):
     """Parse + validate the sink's DECLARED output schema — the
     reference's third sink property (``MapRDBJSONSink.java:313-315``
@@ -67,26 +97,7 @@ def parse_declared_schema(schema_ddl: str, key_field: str, strict: bool = True):
         st = StructType.fromDDL(schema_ddl)
     except Exception as e:
         raise ValueError(f"unable to parse output schema: {schema_ddl!r}") from e
-    names = {f.name for f in st.fields}
-    if key_field not in names:
-        raise ValueError(f"key field {key_field!r} not in declared schema {sorted(names)}")
-    for field in st.fields:
-        dt = field.dataType
-        if field.name == key_field and not isinstance(dt, _KEY_TYPES):
-            raise ValueError(
-                f"key field {key_field!r} has unsupported key type {dt.simpleString()}"
-            )
-        if not strict:
-            continue
-        ok = isinstance(dt, DOC_SINK_SUPPORTED_TYPES) or (
-            isinstance(dt, T.ArrayType)
-            and isinstance(dt.elementType, DOC_SINK_SUPPORTED_TYPES)
-        )
-        if not ok:
-            raise ValueError(
-                f"unsupported type {dt.simpleString()} for declared field "
-                f"{field.name!r} (reference-compatible strict mode)"
-            )
+    _check_fields(st.fields, key_field, strict, declared=True)
     return st
 
 
@@ -134,25 +145,7 @@ def validate_doc_schema(df: DataFrame, key_field: str, strict: bool = True) -> N
     """Configure-time schema validation, mirroring the reference's
     IllegalArgumentException behavior (MapRDBJSONSink.java:292-296,
     :321-327). Raises ValueError on violations."""
-    names = {f.name for f in df.schema.fields}
-    if key_field not in names:
-        raise ValueError(f"key field {key_field!r} not in schema {sorted(names)}")
-    for field in df.schema.fields:
-        dt = field.dataType
-        if field.name == key_field and not isinstance(dt, _KEY_TYPES):
-            raise ValueError(
-                f"key field {key_field!r} has unsupported key type {dt.simpleString()}"
-            )
-        if not strict:
-            continue
-        ok = isinstance(dt, DOC_SINK_SUPPORTED_TYPES) or (
-            isinstance(dt, T.ArrayType) and isinstance(dt.elementType, DOC_SINK_SUPPORTED_TYPES)
-        )
-        if not ok:
-            raise ValueError(
-                f"unsupported type {dt.simpleString()} for field {field.name!r} "
-                "(reference-compatible strict mode; pass strict=False to allow)"
-            )
+    _check_fields(df.schema.fields, key_field, strict, declared=False)
 
 
 def encode_documents(df: DataFrame, key_field: str, strict: bool = True) -> DataFrame:

@@ -243,13 +243,19 @@ class MapRDocWriter(DataSourceWriter):
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         stage = self._stage_dir()
         os.makedirs(stage, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
         rows = [r.asDict() for r in iterator]
         cols = self.schema.fieldNames()
-        table = pa.table({c: [r.get(c) for r in rows] for c in cols})
+        # the declared schema, not inference: an empty partition would
+        # otherwise publish null-typed columns that break schema-less reads
+        table = pa.table(
+            {c: [r.get(c) for r in rows] for c in cols},
+            schema=to_arrow_schema(self.schema),
+        )
         pq.write_table(table, os.path.join(stage, name))
         return _FileCommit(name)
 

@@ -9,12 +9,14 @@ SQL, so the parse semantics are cross-checked end to end.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapr_plugins_spark.catalog import table as _t
+from mapr_plugins_spark.discovery import family_queries
 from mapr_plugins_spark.plans.partitioning import fan_out
 from mapr_plugins_spark.sources.formats import (
     CLF_REGEX,
@@ -272,19 +274,7 @@ def q73_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def format_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        fn.__name__: fn
-        for fn in (
-            q26_clf_parse,
-            q27_syslog_parse,
-            q28_grok_parse,
-            q29_csv_parse,
-            q71_warc_parse,
-            q72_jsonl_parse,
-            q73_fixedwidth_parse,
-            q74_csv_corrupt,
-        )
-    }
+    return family_queries(sys.modules[__name__])
 
 
 # ---------------------------------------------------------------------------

@@ -11,12 +11,14 @@ timestamp formatting/timezone can leak into the hash.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapr_plugins_spark.catalog import table as _t
+from mapr_plugins_spark.discovery import family_queries
 from mapr_plugins_spark.streaming.replay import (
     as_event_time,
     events_stream,
@@ -388,7 +390,7 @@ def _admission_delta(batch: DataFrame) -> DataFrame:
     roster row per document (NULL band/sig) so docs too short to sign
     are still admitted."""
     from mapr_plugins_spark.operators.dedup import minhash_band_signatures
-    from mapr_plugins_spark.operators.registry import _BAND_ROWS, _MINHASH_SEEDS
+    from mapr_plugins_spark.operators.reg_common import _BAND_ROWS, _MINHASH_SEEDS
 
     bands = minhash_band_signatures(
         batch, "doc_id", "text", k=3, n_hashes=_MINHASH_SEEDS, band_rows=_BAND_ROWS
@@ -1408,58 +1410,29 @@ def s26_stream_bigram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    fns = [
-        s01_tumbling_window,
-        s02_sliding_window,
-        s03_session_window,
-        s04_stateful_dedup,
-        s05_stream_static_join,
-        s06_stream_stream_join,
-        s07_dedup_within_watermark,
-        s08_stateful_running_max,
-        s10_cdc_merge_upsert,
-        s11_pyds_kafka_source,
-        s12_stream_ewma,
-        s13_stream_dedup_admission,
-        s14_stream_heavy_hitters,
-        s15_stream_drift,
-        s16_stream_token_budget,
-        s17_stream_heavy_hitters_bounded,
-        s18_stream_cms,
-        s19_stream_quantile,
-        s20_stream_rollup,
-        s21_stream_holt,
-        s22_stream_zscore,
-        s23_stream_markov,
-        s24_stream_psi,
-        s25_stream_semantic_admission,
-        s26_stream_bigram_drift,
-    ]
-    if tws_available():
-        fns.append(s09_transform_with_state)
-    return {fn.__name__: fn for fn in fns}
+    fns = family_queries(sys.modules[__name__])
+    if not tws_available():
+        del fns["s09_transform_with_state"]
+    return fns
 
 
 def streaming_oracles() -> dict[str, str]:
-    from mapr_plugins_spark.operators.registry import (
+    from mapr_plugins_spark.operators.reg_analytics import (
+        DRIFT_CHI2_ORACLE_SQL,
+        HOLT_TREND_ORACLE_SQL,
+        MARKOV_ORACLE_SQL,
+        ZSCORE_ORACLE_SQL,
+        _psi_oracle,
+    )
+    from mapr_plugins_spark.operators.reg_common import (
         _CORPUS_SQL,
         _TOKS_SQL,
         _int_d2_sql,
         _minhash_pairs_ctes,
     )
-
-    from mapr_plugins_spark.operators.registry import (
-        DRIFT_CHI2_ORACLE_SQL,
-        TOKEN_BUDGET_ORACLE_SQL,
-        HOLT_TREND_ORACLE_SQL,
-        ZSCORE_ORACLE_SQL,
-        MARKOV_ORACLE_SQL,
-        _psi_oracle,
-    )
-
-    from mapr_plugins_spark.operators.registry import _cms_oracle
-
-    from mapr_plugins_spark.operators.registry import ROLLUP_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_curation import TOKEN_BUDGET_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_relops import ROLLUP_ORACLE_SQL
+    from mapr_plugins_spark.operators.reg_sketch_graph import _cms_oracle
 
     oracles = {
         # every state component folds commutatively, so the streaming

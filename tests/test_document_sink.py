@@ -172,6 +172,34 @@ def test_maprdoc_pyds_writer_two_phase_commit(spark, sf_dir, tmp_path):
     assert a == b
 
 
+def test_maprdoc_empty_partitions_publish_the_declared_schema(spark, tmp_path):
+    """More partitions than rows: the empty partitions' part files must
+    carry the writer's Arrow schema, not null-typed columns, so a
+    schema-less read (which may infer from any part file) sees every row."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from mapr_plugins_spark.sinks.document import encode_documents
+    from mapr_plugins_spark.sources.pyds import register_sink
+
+    register_sink(spark)
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k BIGINT, v STRING")
+    docs = encode_documents(src, key_field="k").repartition(4)
+    out = str(tmp_path / "sparse")
+    docs.write.format("maprdoc").mode("overwrite").option("path", out).save()
+
+    want = to_arrow_schema(docs.schema)
+    parts = glob.glob(os.path.join(out, "part-*.parquet"))
+    assert len(parts) == 4
+    for f in parts:
+        assert pq.read_schema(f).remove_metadata().equals(want), f
+    back = spark.read.parquet(out)
+    assert sorted(r["_id"] for r in back.collect()) == ["1", "2"]
+
+
 def test_maprdoc_pyds_writer_rejects_unkeyed_input(spark, sf_dir, tmp_path):
     import pytest as _pytest
 

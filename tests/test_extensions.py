@@ -6,6 +6,15 @@ from __future__ import annotations
 import pytest
 
 from mapr_plugins_spark.operators import registry as R
+from mapr_plugins_spark.operators import (
+    reg_analytics,
+    reg_ann,
+    reg_curation,
+    reg_dedup,
+    reg_relops,
+    reg_sketch_graph,
+    reg_text,
+)
 
 
 @pytest.mark.parametrize("key", sorted(R.extension_oracles()))
@@ -19,10 +28,10 @@ def test_extension_matches_oracle(spark, sf_dir, key):
 def test_minhash_finds_injected_near_dups(spark, sf_dir):
     """Every injected variant (id+1000000, first word dropped) must pair
     with its source doc at jaccard >= 0.5."""
-    pairs = R.x_dedup_minhash_pairs(spark, sf_dir)
+    pairs = reg_dedup.x_dedup_minhash_pairs(spark, sf_dir)
     rows = {(r.id_a, r.id_b) for r in pairs.collect()}
-    docs = R.q22_exact_dedup(spark, sf_dir).count() // 1  # doc count via dedup
-    n_docs = R.x_text_tokens(spark, sf_dir).count()
+    docs = reg_dedup.q22_exact_dedup(spark, sf_dir).count() // 1  # doc count via dedup
+    n_docs = reg_text.x_text_tokens(spark, sf_dir).count()
     found = sum((i, i + 1000000) in rows for i in range(n_docs))
     assert found >= 0.9 * n_docs, f"only {found}/{n_docs} injected near-dups found"
 
@@ -31,8 +40,8 @@ def test_incremental_dedup_covers_injected_wave(spark, sf_dir):
     """Every injected delta doc must pair with its corpus source, and
     every emitted pair must be strictly cross-side (corpus, delta) —
     the incremental path must never re-pair the corpus with itself."""
-    pairs = {(r.id_a, r.id_b) for r in R.x_dedup_incremental(spark, sf_dir).collect()}
-    n_docs = R.x_text_tokens(spark, sf_dir).count()
+    pairs = {(r.id_a, r.id_b) for r in reg_dedup.x_dedup_incremental(spark, sf_dir).collect()}
+    n_docs = reg_text.x_text_tokens(spark, sf_dir).count()
     found = sum((i, i + 1000000) in pairs for i in range(n_docs))
     assert found >= 0.9 * n_docs, f"only {found}/{n_docs} injected near-dups found"
     assert all(a < 1000000 <= b for a, b in pairs)
@@ -44,7 +53,7 @@ def test_pagerank_centrality_orders_by_degree(spark, sf_dir):
     damping conserve mass up to floor-division loss)."""
     from mapr_plugins_spark.operators.graph import SCALE
 
-    rows = R.x_pagerank(spark, sf_dir).collect()
+    rows = reg_sketch_graph.x_pagerank(spark, sf_dir).collect()
     sup = [r.rank_micro for r in rows if r.node.startswith("s")]
     cus = [r.rank_micro for r in rows if r.node.startswith("c")]
     assert sup and cus
@@ -58,8 +67,8 @@ def test_cdc_chunk_dedup_is_shift_robust(spark, sf_dir):
     most injected variants must pair with their source at jaccard ≥ 0.5
     — the property fixed-block hashing lacks (a 1-word shift would
     change every block)."""
-    pairs = {(r.id_a, r.id_b) for r in R.x_cdc_chunk_dedup(spark, sf_dir).collect()}
-    n_docs = R.x_text_tokens(spark, sf_dir).count()
+    pairs = {(r.id_a, r.id_b) for r in reg_dedup.x_cdc_chunk_dedup(spark, sf_dir).collect()}
+    n_docs = reg_text.x_text_tokens(spark, sf_dir).count()
     found = sum((i, i + 1000000) in pairs for i in range(n_docs))
     assert found >= 0.7 * n_docs, f"only {found}/{n_docs} shifted near-dups found"
 
@@ -107,10 +116,8 @@ def test_cdc_chunk_freq_cap_oracle_replays_where_it_bites(spark, sf_dir):
     sf0.001): Spark and DuckDB must agree on exactly which pairs the
     stop-chunk removal prunes."""
     from mapr_plugins_spark.operators.dedup import cdc_chunk_dedup_pairs
-    from mapr_plugins_spark.operators.registry import (
-        _cdc_chunk_oracle,
-        _dedup_corpus,
-    )
+    from mapr_plugins_spark.operators.reg_common import _dedup_corpus
+    from mapr_plugins_spark.operators.reg_dedup import _cdc_chunk_oracle
     from tests.oracle_harness import assert_matches_oracle
 
     corpus = _dedup_corpus(spark, sf_dir)
@@ -140,7 +147,7 @@ def test_semantic_dedup_codebook_is_fixed_count(spark, sf_dir):
         n_cells = (n - 1) // stride + 1  # vec_ids 0..n-1 ≡ 0 (mod stride)
         assert n_cells <= 257, (n, n_cells)
         assert n_cells >= min(n, 129), (n, n_cells)  # never degenerate
-    out = R.x_semantic_dedup_codebook(spark, sf_dir).collect()
+    out = reg_dedup.x_semantic_dedup_codebook(spark, sf_dir).collect()
     emb = table(spark, sf_dir, "embeddings")
     n = emb.count()
     stride = (n + 255) // 256
@@ -168,11 +175,11 @@ def test_fuzzy_join_cap_drops_exactly_nonrepresentative_pairs(spark, sf_dir):
 
     uncapped = {
         (r.key_a, r.key_b, r.dist)
-        for r in R.x_fuzzy_join_levenshtein(spark, sf_dir).collect()
+        for r in reg_dedup.x_fuzzy_join_levenshtein(spark, sf_dir).collect()
     }
     capped = {
         (r.key_a, r.key_b, r.dist)
-        for r in R.x_fuzzy_join_capped(spark, sf_dir).collect()
+        for r in reg_dedup.x_fuzzy_join_capped(spark, sf_dir).collect()
     }
     groups = defaultdict(list)
     for r in table(spark, sf_dir, "part").select("p_partkey", "p_name").collect():
@@ -189,7 +196,7 @@ def test_fuzzy_join_cap_rejects_bad_widths(spark, sf_dir):
     requirement instead of silently emptying or truncating."""
     import pytest
 
-    from mapr_plugins_spark.operators.registry import _fuzzy_name_pairs
+    from mapr_plugins_spark.operators.reg_dedup import _fuzzy_name_pairs
 
     for bad in (0, -1, 2.5):
         with pytest.raises(ValueError, match="integer >= 1"):
@@ -218,9 +225,9 @@ def test_fuzzy_join_cap_is_lossless_at_the_name_level(spark, sf_dir):
 
     uncapped = {
         (r.key_a, r.key_b, r.dist)
-        for r in R.x_fuzzy_join_levenshtein(spark, sf_dir).collect()
+        for r in reg_dedup.x_fuzzy_join_levenshtein(spark, sf_dir).collect()
     }
-    capped = R.x_fuzzy_join_capped(spark, sf_dir).collect()
+    capped = reg_dedup.x_fuzzy_join_capped(spark, sf_dir).collect()
     name_of, groups = {}, defaultdict(list)
     for r in table(spark, sf_dir, "part").select("p_partkey", "p_name").collect():
         name_of[r.p_partkey] = r.p_name
@@ -313,7 +320,7 @@ def test_semantic_codebook_band_guard_rejects_sparse_ids(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
     df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     with pytest.raises(ValueError, match=r"\[128, 512\]"):
-        R.x_semantic_dedup_codebook(spark, str(tmp_path))
+        reg_dedup.x_semantic_dedup_codebook(spark, str(tmp_path))
 
 
 def test_semantic_dedup_invariants(spark, sf_dir):
@@ -324,7 +331,7 @@ def test_semantic_dedup_invariants(spark, sf_dir):
 
     from mapr_plugins_spark.catalog import table
 
-    out = R.x_semantic_dedup(spark, sf_dir).collect()
+    out = reg_dedup.x_semantic_dedup(spark, sf_dir).collect()
     assert len(out) == table(spark, sf_dir, "embeddings").count()
     by_cluster = defaultdict(list)
     for r in out:
@@ -401,7 +408,8 @@ def test_trained_centroids_path_on_ivf_index(spark, sf_dir):
         embedding_near_dup_pairs,
         semantic_dedup,
     )
-    from mapr_plugins_spark.operators.registry import _ensure_staged, _ivf_index_dir
+    from mapr_plugins_spark.operators.reg_ann import _ivf_index_dir
+    from mapr_plugins_spark.operators.reg_common import _ensure_staged
     from mapr_plugins_spark.operators.similarity import ivf_index_write
 
     emb = table(spark, sf_dir, "embeddings")
@@ -587,8 +595,8 @@ def test_embcos_high_cosine_twins_co_assign(spark, sf_dir):
 def test_lsh_ann_recall_vs_bruteforce(spark, sf_dir):
     """LSH top-5 must overlap the exact top-5 by >= 2 on the fixed data
     (deterministic: hyperplanes and data are both fixed)."""
-    exact = {r.vec_id for r in R.q24_ann_topk(spark, sf_dir).collect()}
-    approx = {r.vec_id for r in R.x_ann_lsh_topk(spark, sf_dir).collect()}
+    exact = {r.vec_id for r in reg_ann.q24_ann_topk(spark, sf_dir).collect()}
+    approx = {r.vec_id for r in reg_ann.x_ann_lsh_topk(spark, sf_dir).collect()}
     assert len(exact) == 5
     assert len(exact & approx) >= 2, f"LSH recall too low: {exact & approx}"
 
@@ -596,7 +604,7 @@ def test_lsh_ann_recall_vs_bruteforce(spark, sf_dir):
 def test_mm_features_deterministic_stub(spark, sf_dir):
     """mapInPandas plumbing: schema + values of the deterministic fake
     decode, cross-checked in pure Python."""
-    out = {r.doc_id: r for r in R.x_mm_features(spark, sf_dir).collect()}
+    out = {r.doc_id: r for r in reg_relops.x_mm_features(spark, sf_dir).collect()}
     from mapr_plugins_spark.catalog import table
 
     docs = {r.doc_id: r.text for r in table(spark, sf_dir, "documents").collect()}
@@ -657,13 +665,13 @@ def test_ivf_ann_recall_vs_bruteforce(spark, sf_dir):
 
     emb = table(spark, sf_dir, "embeddings")
     probe = probe_of(emb, probe_id=0)
-    exact = [r.vec_id for r in R.q24_ann_topk(spark, sf_dir).collect()]
+    exact = [r.vec_id for r in reg_ann.q24_ann_topk(spark, sf_dir).collect()]
     full_probe = [
         r.vec_id for r in ivf_topk(emb, probe, k=5, n_lists=16, n_probe=16).collect()
     ]
     assert full_probe == exact, f"full-probe IVF must be exact: {full_probe} vs {exact}"
     # the graded key is the INDEX-BACKED exhaustive probe — also exact
-    indexed = [r.vec_id for r in R.x_ann_ivf_topk(spark, sf_dir).collect()]
+    indexed = [r.vec_id for r in reg_ann.x_ann_ivf_topk(spark, sf_dir).collect()]
     assert indexed == exact, f"indexed exhaustive IVF must be exact: {indexed} vs {exact}"
     # partial probing (the approximate path) keeps nonzero overlap
     partial = {
@@ -681,7 +689,7 @@ def test_hll_sketch_accuracy(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapr_plugins_spark.catalog import table
-    from mapr_plugins_spark.operators.registry import x_sketch_hll
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_sketch_hll
 
     rows = {r["event_type"]: r for r in x_sketch_hll(spark, sf_dir).collect()}
     ev = table(spark, sf_dir, "events")
@@ -804,11 +812,9 @@ def test_ivf_batch_matches_brute_on_full_probe(spark, sf_dir):
 def test_ann_guard_queries_execute(spark, sf_dir):
     """The self-verifying ANN queries run end-to-end (their in-plan
     recall guards hold on the shipped corpus)."""
-    from mapr_plugins_spark.operators import registry as R
-
-    rows = R.x_ann_ivf_batch(spark, sf_dir).collect()
+    rows = reg_ann.x_ann_ivf_batch(spark, sf_dir).collect()
     assert rows and all(0.0 <= r.recall_at_5 <= 1.0 for r in rows)
-    rows = R.x_ann_lsh_topk(spark, sf_dir).collect()
+    rows = reg_ann.x_ann_lsh_topk(spark, sf_dir).collect()
     assert rows and rows[0].recall_at_k >= 0.4
 
 
@@ -818,7 +824,7 @@ def test_ensure_staged_is_idempotent_and_atomic(tmp_path):
     cost) and a racing second build must lose cleanly."""
     import os
 
-    from mapr_plugins_spark.operators.registry import _ensure_staged
+    from mapr_plugins_spark.operators.reg_common import _ensure_staged
 
     d = str(tmp_path / "idx")
     calls = []
@@ -844,7 +850,7 @@ def test_recall_guard_throws_on_violation(spark):
     column pruning and never evaluated — a failing guard collected
     cleanly.)"""
     import pytest
-    from mapr_plugins_spark.operators.registry import _with_recall_guard
+    from mapr_plugins_spark.operators.reg_ann import _with_recall_guard
 
     approx = spark.createDataFrame([(1,), (2,)], "vec_id long")
     exact = spark.createDataFrame([(10,), (20,)], "vec_id long")  # recall 0
@@ -955,8 +961,8 @@ def test_substr_strip_complements_span_profile(spark, sf_dir):
     zero duplicated tokens keeps its text verbatim."""
     from mapr_plugins_spark.catalog import table
 
-    prof = {r.doc_id: r for r in R.x_substr_dedup(spark, sf_dir).collect()}
-    strip = {r.doc_id: r for r in R.x_substr_strip(spark, sf_dir).collect()}
+    prof = {r.doc_id: r for r in reg_dedup.x_substr_dedup(spark, sf_dir).collect()}
+    strip = {r.doc_id: r for r in reg_dedup.x_substr_strip(spark, sf_dir).collect()}
     docs = {r.doc_id: r.text for r in table(spark, sf_dir, "documents").collect()}
     assert set(prof) == set(strip) == set(docs)
     for doc_id, p in prof.items():
@@ -1011,7 +1017,7 @@ def test_pq_seed_vectors_quantize_to_themselves(spark, sf_dir):
     """Codebook seeds are their own nearest centroid in every subspace
     (distance 0), so vec_id c < kc must encode as [c]*m — a sharp
     correctness law for the argmin and its tie-breaking."""
-    rows = R.x_embed_pq_encode(spark, sf_dir).filter("vec_id < 16").collect()
+    rows = reg_ann.x_embed_pq_encode(spark, sf_dir).filter("vec_id < 16").collect()
     assert len(rows) == 16
     for r in rows:
         assert r.codes == ",".join([str(r.vec_id)] * 8), (r.vec_id, r.codes)
@@ -1019,7 +1025,7 @@ def test_pq_seed_vectors_quantize_to_themselves(spark, sf_dir):
 
 def test_pq_codes_shape(spark, sf_dir):
     """Every vector gets m=8 codes, each in [0, kc=16)."""
-    rows = R.x_embed_pq_encode(spark, sf_dir).collect()
+    rows = reg_ann.x_embed_pq_encode(spark, sf_dir).collect()
     for r in rows:
         cs = [int(c) for c in r.codes.split(",")]
         assert len(cs) == 8 and all(0 <= c < 16 for c in cs), r
@@ -1031,7 +1037,7 @@ def test_scd2_interval_laws(spark, sf_dir):
     start — the partition-of-timeline property SCD2 promises."""
     from collections import defaultdict
 
-    rows = R.x_scd2_build(spark, sf_dir).collect()
+    rows = reg_relops.x_scd2_build(spark, sf_dir).collect()
     by_user = defaultdict(list)
     for r in rows:
         by_user[r.user_id].append(r)
@@ -1048,7 +1054,7 @@ def test_scd2_interval_laws(spark, sf_dir):
 def test_group_split_is_leakage_safe(spark, sf_dir):
     """All documents of one source land on one side — the property that
     keeps intra-source near-duplicates from straddling train/test."""
-    rows = R.x_group_split(spark, sf_dir).collect()
+    rows = reg_curation.x_group_split(spark, sf_dir).collect()
     per_source = {}
     for r in rows:
         per_source.setdefault(r.source, set()).add(r.split)
@@ -1063,7 +1069,7 @@ def test_nfc_normalize_idempotent(spark, sf_dir):
     from mapr_plugins_spark.operators.text import nfc_normalize
     from pyspark.sql import functions as F
 
-    out = R.x_text_nfc_normalize(spark, sf_dir)
+    out = reg_text.x_text_nfc_normalize(spark, sf_dir)
     again = nfc_normalize(out, text_col="norm_text", out_col="norm2")
     assert again.filter(F.col("norm2") != F.col("norm_text")).count() == 0
     assert out.filter(~F.col("changed")).count() == 0
@@ -1078,7 +1084,7 @@ def test_bpe_merges_actually_fire(spark, sf_dir):
 
     from mapr_plugins_spark.catalog import table
 
-    out = R.x_bpe_encode(spark, sf_dir)
+    out = reg_text.x_bpe_encode(spark, sf_dir)
     chars = table(spark, sf_dir, "documents").select(
         "doc_id", (F.length(F.replace("text", F.lit(" "), F.lit(""))).alias("n_chars"))
     )
@@ -1102,7 +1108,7 @@ def test_ivfpq_results_come_from_probed_lists(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     _, _, assigned = ivfpq_parts(emb, n_lists=8, m=8, kc=16)
     lists = {r.vec_id: r.list_id for r in assigned.collect()}
-    hits = [r.vec_id for r in R.x_ann_ivfpq_topk(spark, sf_dir).collect()]
+    hits = [r.vec_id for r in reg_ann.x_ann_ivfpq_topk(spark, sf_dir).collect()]
     assert len(hits) == 10
     probed = {lists[v] for v in hits}
     assert len(probed) <= 4, probed
@@ -1117,7 +1123,7 @@ def test_winsorize_clip_laws(spark, sf_dir):
 
     from mapr_plugins_spark.catalog import table
 
-    out = R.x_winsorize(spark, sf_dir)
+    out = reg_analytics.x_winsorize(spark, sf_dir)
     ev = table(spark, sf_dir, "events").select("event_id", "value")
     j = out.join(ev, "event_id")
     n = j.count()
@@ -1165,8 +1171,8 @@ def test_pq_rerank_recall_dominates_raw_adc(spark, sf_dir):
 
     emb = table(spark, sf_dir, "embeddings")
     exact = [r.vec_id for r in brute_force_topk(emb, probe_of(emb, 0), k=10).collect()]
-    rer = [r.vec_id for r in R.x_ann_pq_rerank(spark, sf_dir).collect()]
-    adc = [r.vec_id for r in R.x_ann_pq_topk(spark, sf_dir).collect()]
+    rer = [r.vec_id for r in reg_ann.x_ann_pq_rerank(spark, sf_dir).collect()]
+    adc = [r.vec_id for r in reg_ann.x_ann_pq_topk(spark, sf_dir).collect()]
     assert len(set(rer) & set(exact)) >= len(set(adc) & set(exact))
     assert len(rer) == 10
 
@@ -1175,7 +1181,7 @@ def test_gopher_rules_verdict_consistency(spark, sf_dir):
     """Both verdicts occur on the corpus; fail_reason is NULL exactly
     on passing docs and names the FIRST violated rule otherwise; the
     reported features support the verdict they claim."""
-    rows = R.x_gopher_rules(spark, sf_dir).collect()
+    rows = reg_text.x_gopher_rules(spark, sf_dir).collect()
     assert any(r.passes for r in rows) and any(not r.passes for r in rows)
     for r in rows:
         assert (r.fail_reason is None) == r.passes
@@ -1198,7 +1204,7 @@ def test_drift_chi2_statistic_laws(spark, sf_dir):
     from mapr_plugins_spark.catalog import table
     from mapr_plugins_spark.operators.analytics import drift_chi2
 
-    rows = R.x_drift_chi2(spark, sf_dir).collect()
+    rows = reg_analytics.x_drift_chi2(spark, sf_dir).collect()
     stat = sum(r.chi2_contrib6 for r in rows if r.chi2_contrib6 is not None)
     assert stat >= 0
     assert all(r.chi2_contrib6 is None or r.chi2_contrib6 >= 0 for r in rows)
@@ -1229,7 +1235,7 @@ def test_token_budget_fill_laws(spark, sf_dir):
     the budget, and the first doc of every source is kept when it fits."""
     from collections import defaultdict
 
-    rows = R.x_token_budget_fill(spark, sf_dir).collect()
+    rows = reg_curation.x_token_budget_fill(spark, sf_dir).collect()
     by_src = defaultdict(list)
     for r in rows:
         by_src[r.source].append(r)
@@ -1247,7 +1253,7 @@ def test_matryoshka_full_dim_is_identity(spark, sf_dir):
     """At the full dimension the prefix IS the embedding: overlap must
     be exactly k and top-1 must equal the exact top-1; truncated dims
     report values in [0, k]."""
-    rows = {r.dim: r for r in R.x_matryoshka_eval(spark, sf_dir).collect()}
+    rows = {r.dim: r for r in reg_ann.x_matryoshka_eval(spark, sf_dir).collect()}
     from mapr_plugins_spark.catalog import table
     from mapr_plugins_spark.operators.similarity import brute_force_topk, probe_of
 
@@ -1326,7 +1332,7 @@ def test_dsir_ratio_micro_far_from_rounding_boundary(sf_dir):
     import duckdb
 
     from mapr_plugins_spark.functions.portable_hash import seeded_hash60_sql
-    from mapr_plugins_spark.operators.registry import _TOKS_SQL
+    from mapr_plugins_spark.operators.reg_common import _TOKS_SQL
 
     con = duckdb.connect()
     con.execute(
@@ -1381,7 +1387,7 @@ def test_bpe_train_learned_table_compresses_via_encoder(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapr_plugins_spark.catalog import table
-    from mapr_plugins_spark.operators.registry import x_bpe_train
+    from mapr_plugins_spark.operators.reg_text import x_bpe_train
     from mapr_plugins_spark.operators.text import bpe_encode
 
     rows = sorted(x_bpe_train(spark, sf_dir).collect(), key=lambda r: r.rank)
@@ -1534,7 +1540,7 @@ def test_lr_quality_score_laws(spark, sf_dir):
     BOTH verdicts occur on the corpus, and keep ⟺ score > threshold."""
     from pyspark.sql import functions as F
 
-    out = R.x_quality_lr_score(spark, sf_dir)
+    out = reg_analytics.x_quality_lr_score(spark, sf_dir)
     bad = out.filter(
         (F.col("f_cap") < 0) | (F.col("f_cap") > 1_000_000)
         | (F.col("f_stop") < 0) | (F.col("f_stop") > 1_000_000)
@@ -1558,7 +1564,7 @@ def test_mad_outliers_laws(spark, sf_dir):
     a minority in every group, and both verdicts occur."""
     from pyspark.sql import functions as F
 
-    out = R.x_mad_outliers(spark, sf_dir)
+    out = reg_analytics.x_mad_outliers(spark, sf_dir)
     per = out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("is_outlier").cast("int")).alias("n_out"),
@@ -1578,7 +1584,7 @@ def test_k_anonymity_laws(spark, sf_dir):
 
     from mapr_plugins_spark.catalog import table
 
-    out = R.x_k_anonymity(spark, sf_dir)
+    out = reg_analytics.x_k_anonymity(spark, sf_dir)
     n = table(spark, sf_dir, "customer").count()
     assert out.agg(F.sum("class_size")).collect()[0][0] == n
     assert out.filter(F.col("is_anonymous") != (F.col("class_size") >= 10)).count() == 0
@@ -1729,8 +1735,8 @@ def test_bpe_encode_fast_equals_chain_shipped_table(spark, sf_dir):
     """The Arrow-vectorized encoder must be row-for-row identical to
     the codegen replace chain at the shipped merge table (the same
     equality pattern that pins bpe_train_collected to bpe_train)."""
-    a = R.x_bpe_encode(spark, sf_dir).orderBy("doc_id").collect()
-    b = R.x_bpe_encode_fast(spark, sf_dir).orderBy("doc_id").collect()
+    a = reg_text.x_bpe_encode(spark, sf_dir).orderBy("doc_id").collect()
+    b = reg_text.x_bpe_encode_fast(spark, sf_dir).orderBy("doc_id").collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
@@ -1792,7 +1798,7 @@ def test_sparsify_edges_deterministic_across_partitionings(spark, sf_dir):
     strict, non-empty subset at p=1/2."""
     from mapr_plugins_spark.operators.graph import sparsify_edges
 
-    edges = R._copurchase_edges(spark, sf_dir)
+    edges = reg_sketch_graph._copurchase_edges(spark, sf_dir)
     a = sorted(map(tuple, sparsify_edges(edges.repartition(3)).collect()))
     b = sorted(map(tuple, sparsify_edges(edges.repartition(11)).collect()))
     assert a == b
@@ -1811,7 +1817,7 @@ def test_triangle_estimate_is_exactly_scaled_sparse_count(spark, sf_dir):
         triangle_global_estimate,
     )
 
-    edges = R._copurchase_edges(spark, sf_dir)
+    edges = reg_sketch_graph._copurchase_edges(spark, sf_dir)
     t_sparse = (
         triangle_count(sparsify_edges(edges))
         .agg(F.expr("CAST(coalesce(sum(n_triangles), 0) DIV 3 AS BIGINT)").alias("t"))
@@ -1825,7 +1831,7 @@ def test_triangle_estimate_guard_throws_on_violation(spark, sf_dir):
     """The accuracy guard is a retained column Catalyst cannot prune:
     with an impossible bound (-1 micro) the query itself must fail."""
     with pytest.raises(Exception, match="DOULION estimate error"):
-        R.x_triangle_estimate(spark, sf_dir, max_rel_err_micro=-1).collect()
+        reg_sketch_graph.x_triangle_estimate(spark, sf_dir, max_rel_err_micro=-1).collect()
 
 
 def test_temperature_mix_laws(spark, sf_dir):
@@ -1836,7 +1842,7 @@ def test_temperature_mix_laws(spark, sf_dir):
     cross-engine floor-rounding hazard, DSIR-style pin)."""
     import math
 
-    out = R.x_temperature_mix(spark, sf_dir)
+    out = reg_curation.x_temperature_mix(spark, sf_dir)
     rows = out.collect()
     per = {}
     for r in rows:
@@ -1863,14 +1869,14 @@ def test_containment_finds_injected_and_dominates_jaccard(spark, sf_dir):
     at containment ≥ 0.8 (true doc-in-doc recall is exact for the
     bottom-k sketch), and containment ≥ Jaccard on any shared pair —
     the asymmetric-inclusion law."""
-    out = R.x_dedup_containment(spark, sf_dir).collect()
+    out = reg_dedup.x_dedup_containment(spark, sf_dir).collect()
     pairs = {(r.id_a, r.id_b): r.containment for r in out}
-    n_docs = R.x_text_tokens(spark, sf_dir).count()
+    n_docs = reg_text.x_text_tokens(spark, sf_dir).count()
     found = sum((i, i + 1000000) in pairs for i in range(n_docs))
     assert found >= 0.9 * n_docs, f"only {found}/{n_docs} injected variants found"
     jac = {
         (r.id_a, r.id_b): r.jaccard
-        for r in R.x_dedup_ngram_jaccard(spark, sf_dir).collect()
+        for r in reg_dedup.x_dedup_ngram_jaccard(spark, sf_dir).collect()
     }
     shared = set(pairs) & set(jac)
     assert shared and all(pairs[p] >= jac[p] - 1e-9 for p in shared)
@@ -1894,7 +1900,7 @@ def test_ccnet_buckets_laws(spark, sf_dir):
     """Tercile law: within every source the three buckets differ by at
     most one row, 'keep' is exactly head+middle, and every head doc
     outscores every tail doc of the same source."""
-    rows = R.x_ccnet_buckets(spark, sf_dir).collect()
+    rows = reg_text.x_ccnet_buckets(spark, sf_dir).collect()
     by_src = {}
     for r in rows:
         by_src.setdefault(r.source, []).append(r)
@@ -1958,7 +1964,7 @@ def test_kcenter_separation_curve_and_determinism(spark, sf_dir):
     from mapr_plugins_spark.operators.similarity import kcenter_select
 
     rows = sorted(
-        R.x_kcenter_select(spark, sf_dir).collect(), key=lambda r: r.center_rank
+        reg_ann.x_kcenter_select(spark, sf_dir).collect(), key=lambda r: r.center_rank
     )
     assert len({r.vec_id for r in rows}) == 8
     min_id = table(spark, sf_dir, "embeddings").agg({"vec_id": "min"}).collect()[0][0]
@@ -2110,11 +2116,10 @@ def test_jl_rerank_recall_vs_bruteforce(spark, sf_dir):
     """The JL coarse cut (top-50 of ~500) must keep most of the exact
     top-10 — pin recall@10 ≥ 0.5 (measured headroom is higher; the
     floor catches a broken projection or cut)."""
-    from mapr_plugins_spark.operators import registry as R
     from mapr_plugins_spark.operators import similarity as S
     from mapr_plugins_spark.catalog import table
 
-    approx = {r.vec_id for r in R.x_ann_jl_rerank(spark, sf_dir).collect()}
+    approx = {r.vec_id for r in reg_ann.x_ann_jl_rerank(spark, sf_dir).collect()}
     emb = table(spark, sf_dir, "embeddings")
     exact = {
         r.vec_id
@@ -2130,7 +2135,7 @@ def test_zorder_block_locality(spark, sf_dir):
     BOTH dimensions. Checked for k=4 (z DIV 256 → 16-wide blocks)."""
     from pyspark.sql import functions as F
 
-    from mapr_plugins_spark.operators.registry import x_zorder_key
+    from mapr_plugins_spark.operators.reg_relops import x_zorder_key
 
     df = x_zorder_key(spark, sf_dir)
     spans = (
@@ -2239,10 +2244,10 @@ def test_holt_linear_hand_computed(spark):
 def test_bootstrap_ci_laws(spark, sf_dir):
     """The interval must bracket the point mean, be properly ordered,
     and be invariant across runs (no RNG state)."""
-    r1 = R.x_bootstrap_ci(spark, sf_dir).collect()[0]
+    r1 = reg_analytics.x_bootstrap_ci(spark, sf_dir).collect()[0]
     assert r1.ci_lo <= r1.point_mean <= r1.ci_hi
     assert r1.ci_lo < r1.ci_hi
-    r2 = R.x_bootstrap_ci(spark, sf_dir).collect()[0]
+    r2 = reg_analytics.x_bootstrap_ci(spark, sf_dir).collect()[0]
     assert (r1.ci_lo, r1.ci_hi, r1.point_mean) == (r2.ci_lo, r2.ci_hi, r2.point_mean)
 
 
@@ -2287,7 +2292,7 @@ def test_skipping_stats_prune_law(spark, sf_dir):
     every matching row (sum of matching rows == full filter count)."""
     from pyspark.sql import functions as F
 
-    rows = R.x_skipping_stats(spark, sf_dir).collect()
+    rows = reg_relops.x_skipping_stats(spark, sf_dir).collect()
     assert rows and any(r.skippable for r in rows)
     from mapr_plugins_spark.catalog import table
 
@@ -2480,7 +2485,7 @@ def test_zscore_stream_twin_equals_batch(spark):
     """The GroupState twin must reproduce the batch operator row for
     row at sf0.001 — same integer state fold, chunked in-order
     replay."""
-    from mapr_plugins_spark.operators.registry import x_zscore_anomaly
+    from mapr_plugins_spark.operators.reg_analytics import x_zscore_anomaly
     from mapr_plugins_spark.streaming.registry import s22_stream_zscore
 
     sf = "/root/testdata/sf0.001"
@@ -2918,7 +2923,7 @@ def test_incremental_novelty_laws(spark):
 def test_wave_ingest_report_partitions_corpus(spark):
     """The four waves partition the corpus exactly and every rate is a
     valid floored rational in [0, 1e6]."""
-    from mapr_plugins_spark.operators.registry import x_wave_ingest_report
+    from mapr_plugins_spark.operators.reg_curation import x_wave_ingest_report
 
     rows = x_wave_ingest_report(spark, "/root/testdata/sf0.001").collect()
     assert {r.wave for r in rows} == {0, 1, 2, 3}

@@ -74,7 +74,7 @@ def test_minhash_signatures_shuffle_free(spark, sf_dir):
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
-    from mapr_plugins_spark.operators.registry import x_asof_join
+    from mapr_plugins_spark.operators.reg_relops import x_asof_join
 
     df = x_asof_join(spark, sf_dir)
     # union + window: shuffles bounded (no O(n²) pair space, no BNLJ)
@@ -141,7 +141,7 @@ def test_ann_brute_force_no_corpus_shuffle(spark, sf_dir):
     """Brute-force top-k: probe broadcast into a corpus map stage +
     TakeOrderedAndProject — the corpus is scanned once and never
     shuffled (valid to ~1e9 vectors per probe batch)."""
-    from mapr_plugins_spark.operators.registry import q24_ann_topk
+    from mapr_plugins_spark.operators.reg_ann import q24_ann_topk
 
     df = q24_ann_topk(spark, sf_dir)
     assert A.shuffle_count(df) == 0, A.plan_str(df)
@@ -163,7 +163,7 @@ def test_hypertable_rollup_single_pass(spark, sf_dir):
     """Every granularity from ONE scan + ONE shuffle: grouping sets plan
     as a single Expand feeding a partial+final aggregate — never one
     shuffle per granularity."""
-    from mapr_plugins_spark.operators.registry import x_hypertable_rollup
+    from mapr_plugins_spark.operators.reg_relops import x_hypertable_rollup
 
     df = x_hypertable_rollup(spark, sf_dir)
     assert A.shuffle_count(df) <= 1, A.plan_str(df)
@@ -182,7 +182,7 @@ def test_lateral_join_decorrelates(spark, sf_dir):
 def test_overlap_join_is_hash_join(spark, sf_dir):
     """Binned interval-overlap join: the bin equi-key must produce a
     hash/sort-merge join, not BNLJ/cartesian."""
-    from mapr_plugins_spark.operators.registry import x_overlap_join
+    from mapr_plugins_spark.operators.reg_relops import x_overlap_join
 
     df = x_overlap_join(spark, sf_dir)
     assert not A.has_cartesian(df), A.plan_str(df)
@@ -190,7 +190,7 @@ def test_overlap_join_is_hash_join(spark, sf_dir):
 
 def test_merge_upsert_single_join(spark, sf_dir):
     """MERGE apply = ONE join pass over target ∪ changeset."""
-    from mapr_plugins_spark.operators.registry import x_merge_upsert
+    from mapr_plugins_spark.operators.reg_relops import x_merge_upsert
 
     df = x_merge_upsert(spark, sf_dir)
     p = A.plan_str(df)
@@ -209,7 +209,7 @@ def test_embcos_candidate_join_keys_include_centroid_cell(spark, sf_dir):
     carry the centroid cell too."""
     import re
 
-    from mapr_plugins_spark.operators.registry import x_dedup_embcos
+    from mapr_plugins_spark.operators.reg_dedup import x_dedup_embcos
 
     p = A.plan_str(x_dedup_embcos(spark, sf_dir))
     key_lists = re.findall(r"keys(?: \[\d+\])?: \[([^\]]*)\]", p)
@@ -221,7 +221,7 @@ def test_embcos_candidate_join_keys_include_centroid_cell(spark, sf_dir):
 def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
     """The eval-set n-gram side must broadcast — the training corpus is
     never shuffled for the contamination check."""
-    from mapr_plugins_spark.operators.registry import x_decontaminate
+    from mapr_plugins_spark.operators.reg_dedup import x_decontaminate
 
     df = x_decontaminate(spark, sf_dir)
     assert A.has_broadcast_join(df), A.plan_str(df)
@@ -240,7 +240,7 @@ def test_dedup_array_joins_never_broadcast(spark, sf_dir):
     loud PREFIX_BROADCAST_BOUND guard (round-10)."""
     import re
 
-    from mapr_plugins_spark.operators.registry import (
+    from mapr_plugins_spark.operators.reg_dedup import (
         x_cdc_chunk_dedup,
         x_cdc_chunk_dedup_capped,
         x_dedup_containment,
@@ -308,7 +308,7 @@ def test_hinted_broadcasts_raise_loudly_past_bound(spark, sf_dir, monkeypatch):
 def test_vocab_encode_broadcasts_vocab(spark, sf_dir):
     """Token→id lookup joins against a broadcast vocabulary; the
     exploded corpus side stays un-shuffled until the re-assembly agg."""
-    from mapr_plugins_spark.operators.registry import x_vocab_encode
+    from mapr_plugins_spark.operators.reg_curation import x_vocab_encode
 
     df = x_vocab_encode(spark, sf_dir)
     assert A.has_broadcast_join(df), A.plan_str(df)
@@ -316,7 +316,7 @@ def test_vocab_encode_broadcasts_vocab(spark, sf_dir):
 
 def test_pii_redact_is_pure_projection(spark, sf_dir):
     """Redaction = scan + codegen projection; zero exchanges."""
-    from mapr_plugins_spark.operators.registry import x_text_pii_redact
+    from mapr_plugins_spark.operators.reg_text import x_text_pii_redact
 
     df = x_text_pii_redact(spark, sf_dir)
     assert A.shuffle_count(df) == 0, A.plan_str(df)
@@ -332,7 +332,7 @@ def test_sessionize_single_shuffle(spark, sf_dir):
 def test_doc_chunk_shuffle_free(spark, sf_dir):
     """Chunking is sequence+slice HOFs: at most the fan_out exchange of
     raw rows, never a key shuffle (fan_out is a no-op at cluster scale)."""
-    from mapr_plugins_spark.operators.registry import x_doc_chunk
+    from mapr_plugins_spark.operators.reg_curation import x_doc_chunk
 
     df = x_doc_chunk(spark, sf_dir)
     assert A.shuffle_count(df) <= 1, A.plan_str(df)
@@ -340,14 +340,14 @@ def test_doc_chunk_shuffle_free(spark, sf_dir):
 
 def test_embed_normalize_shuffle_free(spark, sf_dir):
     """Normalization is a row-local fold; zero exchanges."""
-    from mapr_plugins_spark.operators.registry import x_embed_normalize
+    from mapr_plugins_spark.operators.reg_ann import x_embed_normalize
 
     df = x_embed_normalize(spark, sf_dir)
     assert A.shuffle_count(df) == 0, A.plan_str(df)
 
 
 def test_embed_quantize_shuffle_free(spark, sf_dir):
-    from mapr_plugins_spark.operators.registry import x_embed_quantize
+    from mapr_plugins_spark.operators.reg_ann import x_embed_quantize
 
     df = x_embed_quantize(spark, sf_dir)
     assert A.shuffle_count(df) == 0, A.plan_str(df)
@@ -356,7 +356,7 @@ def test_embed_quantize_shuffle_free(spark, sf_dir):
 def test_inverted_index_two_shuffles_max(spark, sf_dir):
     """distinct(doc,token) + groupBy(token) — AQE may reuse the token
     partitioning, but never more than the two key exchanges."""
-    from mapr_plugins_spark.operators.registry import x_inverted_index
+    from mapr_plugins_spark.operators.reg_text import x_inverted_index
 
     df = x_inverted_index(spark, sf_dir)
     assert A.shuffle_count(df) <= 2, A.plan_str(df)
@@ -379,7 +379,7 @@ def test_agg_filter_single_pass(spark, sf_dir):
 def test_fuzzy_join_is_equi_blocked(spark, sf_dir):
     """The levenshtein predicate rides a hash join on the block key —
     never a cartesian/BNLJ over the full pair space."""
-    from mapr_plugins_spark.operators.registry import x_fuzzy_join_levenshtein
+    from mapr_plugins_spark.operators.reg_dedup import x_fuzzy_join_levenshtein
 
     df = x_fuzzy_join_levenshtein(spark, sf_dir)
     assert not A.has_cartesian(df), A.plan_str(df)
@@ -387,7 +387,7 @@ def test_fuzzy_join_is_equi_blocked(spark, sf_dir):
 
 def test_snapshot_diff_single_join(spark, sf_dir):
     """Diff = ONE full-outer join; both snapshots shuffle once on the key."""
-    from mapr_plugins_spark.operators.registry import x_snapshot_diff
+    from mapr_plugins_spark.operators.reg_dedup import x_snapshot_diff
 
     df = x_snapshot_diff(spark, sf_dir)
     assert A.count_nodes(df, "SortMergeJoin") + A.count_nodes(df, "ShuffledHashJoin") <= 1, (
@@ -397,7 +397,7 @@ def test_snapshot_diff_single_join(spark, sf_dir):
 
 def test_ewma_single_shuffle(spark, sf_dir):
     """Sequential fold: one exchange on the key into the Arrow stage."""
-    from mapr_plugins_spark.operators.registry import x_ewma
+    from mapr_plugins_spark.operators.reg_analytics import x_ewma
 
     df = x_ewma(spark, sf_dir)
     assert A.shuffle_count(df) <= 1, A.plan_str(df)
@@ -407,7 +407,7 @@ def test_row_index_has_no_python_stage(spark, sf_dir):
     """Global row index is all-JVM: local positions come from
     monotonically_increasing_id's documented per-partition counter, so
     no Arrow/Python eval node may appear in the plan."""
-    from mapr_plugins_spark.operators.registry import x_row_index
+    from mapr_plugins_spark.operators.reg_relops import x_row_index
 
     df = x_row_index(spark, sf_dir)
     p = A.plan_str(df)
@@ -420,7 +420,7 @@ def test_epoch_shuffle_has_no_python_stage(spark, sf_dir):
     partition/prefix-sum — like x_row_index it must stay all-JVM (no
     Arrow/Python eval node) and must NOT contain a global-sort window
     (the single-partition scale-killer the prefix-sum design avoids)."""
-    from mapr_plugins_spark.operators.registry import x_epoch_shuffle
+    from mapr_plugins_spark.operators.reg_curation import x_epoch_shuffle
 
     df = x_epoch_shuffle(spark, sf_dir)
     p = A.plan_str(df)
@@ -432,7 +432,7 @@ def test_spatial_join_is_equi_not_cartesian(spark, sf_dir):
     """The gridded spatial join must reach pairs through an equi join
     on the cell key — never a cartesian/BNLJ of the point set (the
     oracle's cross join is the semantics, not the plan)."""
-    from mapr_plugins_spark.operators.registry import x_spatial_join
+    from mapr_plugins_spark.operators.reg_relops import x_spatial_join
 
     df = x_spatial_join(spark, sf_dir)
     p = A.plan_str(df)
@@ -470,7 +470,7 @@ def test_codebook_batch_ann_plan_and_guards(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapr_plugins_spark.catalog import table
-    from mapr_plugins_spark.operators.registry import x_ann_ivf_batch_codebook
+    from mapr_plugins_spark.operators.reg_ann import x_ann_ivf_batch_codebook
     from mapr_plugins_spark.operators.similarity import (
         _MAX_CODEBOOK_CELLS,
         ivf_topk_codebook_batch,
@@ -524,7 +524,7 @@ def test_lsh_indexed_scan_prunes_partitions(spark, sf_dir):
     import os
 
     from mapr_plugins_spark.catalog import table
-    from mapr_plugins_spark.operators.registry import _lsh_index_dir
+    from mapr_plugins_spark.operators.reg_ann import _lsh_index_dir
     from mapr_plugins_spark.operators.similarity import (
         hamming_ball,
         lsh_index_write,
@@ -557,7 +557,7 @@ def test_ivf_indexed_scan_prunes_partitions(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapr_plugins_spark.catalog import table
-    from mapr_plugins_spark.operators.registry import _ivf_index_dir
+    from mapr_plugins_spark.operators.reg_ann import _ivf_index_dir
     from mapr_plugins_spark.operators.similarity import (
         ivf_index_write,
         ivf_topk_indexed_batch,
@@ -583,7 +583,7 @@ def test_semantic_dedup_plan_shape(spark, sf_dir):
     10× sf0.1), never row-at-a-time Python; the within-cluster pair
     join is a hash equi-join on cluster_id — never a cartesian/BNLJ
     pair blow-up."""
-    from mapr_plugins_spark.operators.registry import x_semantic_dedup
+    from mapr_plugins_spark.operators.reg_dedup import x_semantic_dedup
 
     df = x_semantic_dedup(spark, sf_dir)
     p = A.plan_str(df)
@@ -603,7 +603,7 @@ def test_incremental_dedup_plan_shape(spark, sf_dir):
     """Incremental dedup joins delta signatures to corpus signatures on
     (band, sig) — an equi-join, never a cartesian — and stays
     JVM-side."""
-    from mapr_plugins_spark.operators.registry import x_dedup_incremental
+    from mapr_plugins_spark.operators.reg_dedup import x_dedup_incremental
 
     df = x_dedup_incremental(spark, sf_dir)
     p = A.plan_str(df)
@@ -615,7 +615,7 @@ def test_lm_score_plan_shape(spark, sf_dir):
     """The bigram-LM score is pure dataflow: no Python stage; the only
     non-equi join is the broadcast of the single-row vocabulary-size
     aggregate."""
-    from mapr_plugins_spark.operators.registry import x_lm_score
+    from mapr_plugins_spark.operators.reg_text import x_lm_score
 
     df = x_lm_score(spark, sf_dir)
     p = A.plan_str(df)
@@ -628,7 +628,7 @@ def test_substr_dedup_plan_shape(spark, sf_dir):
     shuffle the window stream on the 60-bit BIGINT hash, not the window
     text: the only md5 in the plan is the row-local gram hash, and no
     hashpartitioning on a string gram column may appear."""
-    from mapr_plugins_spark.operators.registry import x_substr_dedup
+    from mapr_plugins_spark.operators.reg_dedup import x_substr_dedup
 
     df = x_substr_dedup(spark, sf_dir)
     p = A.plan_str(df)
@@ -642,7 +642,7 @@ def test_pq_encode_shuffle_free_no_python(spark, sf_dir):
     """PQ compression is a row-local codegen scan against a literal
     codebook: zero exchanges, zero Python — the property that makes
     encoding a 100 TB corpus one embarrassingly-parallel pass."""
-    from mapr_plugins_spark.operators.registry import x_embed_pq_encode
+    from mapr_plugins_spark.operators.reg_ann import x_embed_pq_encode
 
     df = x_embed_pq_encode(spark, sf_dir)
     p = A.plan_str(df)
@@ -654,7 +654,7 @@ def test_pq_topk_no_corpus_shuffle(spark, sf_dir):
     """ADC search: probe side broadcasts (distance table travels, not
     the corpus), corpus scan never hits an Exchange, ranking is
     TakeOrdered — same shape brute_force_topk pins."""
-    from mapr_plugins_spark.operators.registry import x_ann_pq_topk
+    from mapr_plugins_spark.operators.reg_ann import x_ann_pq_topk
 
     df = x_ann_pq_topk(spark, sf_dir)
     p = A.plan_str(df)
@@ -666,7 +666,7 @@ def test_scd2_single_shuffle(spark, sf_dir):
     """Both SCD2 window passes (change-detect lag, interval lead +
     version) share one user_id hash partitioning: exactly one
     exchange end-to-end."""
-    from mapr_plugins_spark.operators.registry import x_scd2_build
+    from mapr_plugins_spark.operators.reg_relops import x_scd2_build
 
     df = x_scd2_build(spark, sf_dir)
     assert A.shuffle_count(df) <= 1, A.plan_str(df)
@@ -675,7 +675,7 @@ def test_scd2_single_shuffle(spark, sf_dir):
 def test_group_split_shuffle_free(spark, sf_dir):
     """Group-coherent split is one md5 per row inside codegen — zero
     exchanges, zero Python."""
-    from mapr_plugins_spark.operators.registry import x_group_split
+    from mapr_plugins_spark.operators.reg_curation import x_group_split
 
     df = x_group_split(spark, sf_dir)
     p = A.plan_str(df)
@@ -687,7 +687,7 @@ def test_bpe_encode_shuffle_free_no_python(spark, sf_dir):
     """BPE tokenization is an ordered literal-replace chain inside
     whole-stage codegen: zero exchanges, zero Python — the tokenizer
     runs in the scan at any corpus size."""
-    from mapr_plugins_spark.operators.registry import x_bpe_encode
+    from mapr_plugins_spark.operators.reg_text import x_bpe_encode
 
     df = x_bpe_encode(spark, sf_dir)
     p = A.plan_str(df)
@@ -701,7 +701,7 @@ def test_ivfpq_no_corpus_shuffle(spark, sf_dir):
     broadcast on list_id — zero exchanges, TakeOrdered ranking. At
     scale list_id is additionally a storage partition key, making the
     same filter an I/O pruner."""
-    from mapr_plugins_spark.operators.registry import x_ann_ivfpq_topk
+    from mapr_plugins_spark.operators.reg_ann import x_ann_ivfpq_topk
 
     df = x_ann_ivfpq_topk(spark, sf_dir)
     p = A.plan_str(df)
@@ -714,7 +714,7 @@ def test_png_header_parse_shuffle_free_no_python(spark, sf_dir):
     """Container-header decode is pure byte arithmetic in codegen:
     zero exchanges, zero Python — the triage/sniffing stage a 100 TB
     multimodal scan runs JVM-side."""
-    from mapr_plugins_spark.operators.registry import x_mm_png_header
+    from mapr_plugins_spark.operators.reg_relops import x_mm_png_header
 
     df = x_mm_png_header(spark, sf_dir)
     p = A.plan_str(df)
@@ -728,7 +728,7 @@ def test_drift_chi2_histogram_shuffles_cells_not_rows(spark, sf_dir):
     a window over the n_bins-row cell table (a second aggregation
     branch would duplicate the lineage and re-scan the corpus). ≤ 2
     exchanges, both over cells — never a row-level shuffle."""
-    from mapr_plugins_spark.operators.registry import x_drift_chi2
+    from mapr_plugins_spark.operators.reg_analytics import x_drift_chi2
 
     df = x_drift_chi2(spark, sf_dir)
     p = A.plan_str(df)
@@ -738,7 +738,7 @@ def test_drift_chi2_histogram_shuffles_cells_not_rows(spark, sf_dir):
 
 def test_token_budget_fill_single_shuffle(spark, sf_dir):
     """Budget fill is one per-group window cumsum: a single exchange."""
-    from mapr_plugins_spark.operators.registry import x_token_budget_fill
+    from mapr_plugins_spark.operators.reg_curation import x_token_budget_fill
 
     df = x_token_budget_fill(spark, sf_dir)
     assert A.shuffle_count(df) <= 1, A.plan_str(df)
@@ -747,7 +747,7 @@ def test_token_budget_fill_single_shuffle(spark, sf_dir):
 def test_matryoshka_eval_no_corpus_shuffle(spark, sf_dir):
     """Each dimension is a broadcast-probe TakeOrdered corpus scan; the
     set algebra runs on candidate-sized frames — no corpus exchange."""
-    from mapr_plugins_spark.operators.registry import x_matryoshka_eval
+    from mapr_plugins_spark.operators.reg_ann import x_matryoshka_eval
 
     df = x_matryoshka_eval(spark, sf_dir)
     p = A.plan_str(df)
@@ -763,7 +763,7 @@ def test_ivfpq_indexed_scan_prunes_partitions(spark, sf_dir):
     float embeddings."""
     import os
 
-    from mapr_plugins_spark.operators.registry import (
+    from mapr_plugins_spark.operators.reg_ann import (
         _ivfpq_index_dir,
         x_ann_ivfpq_indexed,
     )
@@ -788,7 +788,7 @@ def test_ivfpq_indexed_scan_prunes_partitions(spark, sf_dir):
 def test_wav_pcm_decode_shuffle_free_no_python(spark, sf_dir):
     """Content-level PCM decode is byte arithmetic in codegen: zero
     exchanges, zero Python — the waveform decodes inside the scan."""
-    from mapr_plugins_spark.operators.registry import x_mm_wav_pcm
+    from mapr_plugins_spark.operators.reg_relops import x_mm_wav_pcm
 
     df = x_mm_wav_pcm(spark, sf_dir)
     p = A.plan_str(df)
@@ -800,7 +800,7 @@ def test_wav_pcm_decode_shuffle_free_no_python(spark, sf_dir):
 def test_lr_quality_score_shuffle_free_no_python(spark, sf_dir):
     """Classifier inference is row-local integer arithmetic in codegen:
     zero exchanges, zero Python — the model runs inside the scan."""
-    from mapr_plugins_spark.operators.registry import x_quality_lr_score
+    from mapr_plugins_spark.operators.reg_analytics import x_quality_lr_score
 
     df = x_quality_lr_score(spark, sf_dir)
     p = A.plan_str(df)
@@ -825,7 +825,7 @@ def test_fixedwidth_parse_shuffle_free(spark, sf_dir):
 def test_triangle_count_all_hash_joins(spark, sf_dir):
     """Degree-ordered triangle counting must plan every step as a hash
     equi-join — never a cartesian/BNLJ pair blow-up."""
-    from mapr_plugins_spark.operators.registry import x_triangle_count
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_triangle_count
 
     df = x_triangle_count(spark, sf_dir)
     assert not A.has_cartesian(df), A.plan_str(df)
@@ -835,7 +835,7 @@ def test_triangle_estimate_cartesian_free_and_plan_bounded(spark, sf_dir):
     """The DOULION estimator keeps the exact counter's all-equi-join
     shape on the sparsified graph: no cartesian, and its coin is a
     row-local filter (exactly one md5 evaluation per edge)."""
-    from mapr_plugins_spark.operators.registry import x_triangle_estimate_prod
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_triangle_estimate_prod
 
     df = x_triangle_estimate_prod(spark, sf_dir)
     p = A.plan_str(df)
@@ -866,7 +866,7 @@ def test_temperature_mix_corpus_never_shuffles(spark, sf_dir):
     """The only exchanges feed the 1-row-per-source rate aggregate;
     the corpus side reaches the acceptance filter through a broadcast
     join, never a corpus-keyed shuffle (the hash_split scale shape)."""
-    from mapr_plugins_spark.operators.registry import x_temperature_mix
+    from mapr_plugins_spark.operators.reg_curation import x_temperature_mix
 
     df = x_temperature_mix(spark, sf_dir)
     p = A.plan_str(df)
@@ -881,7 +881,7 @@ def test_scd2_apply_pass_through_is_shuffle_bounded(spark, sf_dir):
     """Incremental SCD2: cartesian-free, and the change-detection
     window is the only sort-heavy stage — unaffected dim rows reach
     the output through joins/unions, never a history-wide window."""
-    from mapr_plugins_spark.operators.registry import x_scd2_apply
+    from mapr_plugins_spark.operators.reg_relops import x_scd2_apply
 
     df = x_scd2_apply(spark, sf_dir)
     assert not A.has_cartesian(df), A.plan_str(df)
@@ -890,7 +890,7 @@ def test_scd2_apply_pass_through_is_shuffle_bounded(spark, sf_dir):
 def test_rollup_merge_is_one_partial_final_aggregate(spark, sf_dir):
     """Folding wave states is union + ONE map-side-combined aggregate:
     partial+final HashAggregate pair over the union, no join."""
-    from mapr_plugins_spark.operators.registry import x_rollup_apply
+    from mapr_plugins_spark.operators.reg_relops import x_rollup_apply
 
     df = x_rollup_apply(spark, sf_dir)
     p = A.plan_str(df)
@@ -926,7 +926,7 @@ def test_containment_candidate_join_is_hint_free(spark, sf_dir):
     corpus-proportional — a hint there OOMs executors at 10⁹ docs).
     With auto-broadcast disabled, a hint-free plan shows zero broadcast
     joins: every join falls back to a keyed shuffle."""
-    from mapr_plugins_spark.operators.registry import x_dedup_containment
+    from mapr_plugins_spark.operators.reg_dedup import x_dedup_containment
 
     with A.sql_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = x_dedup_containment(spark, sf_dir)
@@ -960,7 +960,7 @@ def test_jl_projection_is_shuffle_free(spark, sf_dir):
     """The JL projection is row-local arithmetic: zero exchanges, no
     joins — the whole operator must run inside the scan's codegen
     stage (the guard's raise_error is a projection, not a barrier)."""
-    from mapr_plugins_spark.operators.registry import x_embed_jl_project
+    from mapr_plugins_spark.operators.reg_ann import x_embed_jl_project
 
     df = x_embed_jl_project(spark, sf_dir)
     assert A.shuffle_count(df) == 0, A.plan_str(df)
@@ -971,7 +971,7 @@ def test_jl_rerank_is_broadcast_probe_take_ordered(spark, sf_dir):
     """Two-stage JL retrieval: the 1-row projected probe broadcasts,
     both ranking stages plan as TakeOrdered — the corpus never
     shuffles."""
-    from mapr_plugins_spark.operators.registry import x_ann_jl_rerank
+    from mapr_plugins_spark.operators.reg_ann import x_ann_jl_rerank
 
     df = x_ann_jl_rerank(spark, sf_dir)
     p = A.plan_str(df)
@@ -992,7 +992,7 @@ def test_setsim_join_is_hint_free_and_cartesian_free(spark, sf_dir):
     (the array-carrying verify sides)."""
     import re
 
-    from mapr_plugins_spark.operators.registry import x_setsim_join
+    from mapr_plugins_spark.operators.reg_dedup import x_setsim_join
 
     # Pin the UNCACHED plan: a token-array frame left persisted by an
     # earlier test would splice an InMemoryRelation in here, and the
@@ -1017,7 +1017,7 @@ def test_kmeans_final_assignment_is_shuffle_free(spark, sf_dir):
     projection (quantize → literal-centroid distance fold → struct
     min): no exchange, no join, no cartesian. The iterative work all
     happened at bounded driver collects before the plan was built."""
-    from mapr_plugins_spark.operators.registry import x_kmeans_lloyd
+    from mapr_plugins_spark.operators.reg_ann import x_kmeans_lloyd
 
     spark.catalog.clearCache()
     df = x_kmeans_lloyd(spark, sf_dir)
@@ -1033,7 +1033,7 @@ def test_delete_propagate_uses_semi_joins_unhinted(spark, sf_dir):
     broadcast would eventually OOM); the only nested-loop sites are
     the documented 1-row scalar-attach cross joins of the audit
     summary."""
-    from mapr_plugins_spark.operators.registry import x_delete_propagate
+    from mapr_plugins_spark.operators.reg_relops import x_delete_propagate
 
     spark.catalog.clearCache()
     df = x_delete_propagate(spark, sf_dir)
@@ -1045,7 +1045,7 @@ def test_delete_propagate_uses_semi_joins_unhinted(spark, sf_dir):
 def test_zscore_anomaly_single_shuffle(spark, sf_dir):
     """One hash exchange on the user key; the prefix window reuses that
     partitioning — no second shuffle, no join, no Python stage."""
-    from mapr_plugins_spark.operators.registry import x_zscore_anomaly
+    from mapr_plugins_spark.operators.reg_analytics import x_zscore_anomaly
 
     spark.catalog.clearCache()
     df = x_zscore_anomaly(spark, sf_dir)
@@ -1058,7 +1058,7 @@ def test_zscore_anomaly_single_shuffle(spark, sf_dir):
 def test_feature_hashing_single_aggregate_shuffle(spark, sf_dir):
     """Explode + ONE map-side-combined aggregate on (doc, bucket): at
     most one exchange, no join, no Python stage, codegen'd hashing."""
-    from mapr_plugins_spark.operators.registry import x_feature_hashing
+    from mapr_plugins_spark.operators.reg_curation import x_feature_hashing
 
     spark.catalog.clearCache()
     df = x_feature_hashing(spark, sf_dir)

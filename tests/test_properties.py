@@ -77,6 +77,58 @@ def test_priority_window_contract():
     assert not missing, f"window keys without oracle: {missing}"
 
 
+def test_registry_merge_rejects_a_key_in_two_families(monkeypatch):
+    """Families merge disjointly: a key defined in two families raises
+    instead of one silently shadowing the other, and an oracle for a
+    key no family registers raises instead of grading nothing."""
+    import pytest
+
+    import __spark_entry__ as E
+    from mapr_plugins_spark.discovery import merge_disjoint
+    from mapr_plugins_spark.sources import registry as formats
+
+    a = {"q26_clf_parse": "family a", "x_only_a": "a"}
+    b = {"x_only_b": "b", "q26_clf_parse": "family b"}
+    with pytest.raises(KeyError, match="q26_clf_parse"):
+        merge_disjoint((a, b), "query")
+    assert list(merge_disjoint((a, {"x_only_b": "b"}), "query")) == [
+        "q26_clf_parse", "x_only_a", "x_only_b",
+    ]
+
+    shadow = {"q01_filter_project": formats.q26_clf_parse}
+    monkeypatch.setattr(formats, "format_queries", lambda: shadow)
+    with pytest.raises(KeyError, match="q01_filter_project"):
+        E.queries()
+    monkeypatch.undo()
+
+    orphan = {**formats.format_oracles(), "q99_unregistered": "SELECT 1"}
+    monkeypatch.setattr(formats, "format_oracles", lambda: orphan)
+    with pytest.raises(KeyError, match="q99_unregistered"):
+        E.oracle_sql()
+
+
+def test_discovery_rule_ignores_helpers_and_imports():
+    """Only functions the family module itself defines under a key name
+    register: imported key functions, helpers and constants do not."""
+    import types
+
+    from mapr_plugins_spark.discovery import family_queries
+    from mapr_plugins_spark.sources.registry import q26_clf_parse
+
+    fam = types.ModuleType("fake_family")
+    exec(
+        "def q01_a(spark, sf): pass\n"
+        "def x_b(spark, sf): pass\n"
+        "def s02_c(spark, sf): pass\n"
+        "def _helper(spark, sf): pass\n"
+        "def qx_not_a_key(spark, sf): pass\n"
+        "x_CONST = 'SELECT 1'\n",
+        fam.__dict__,
+    )
+    fam.q26_clf_parse = q26_clf_parse  # imported, not defined here
+    assert list(family_queries(fam)) == ["q01_a", "x_b", "s02_c"]
+
+
 @given(rows=_rows)
 @settings(**_SETTINGS)
 def test_json_round_trip_law(spark, rows):

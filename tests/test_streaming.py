@@ -291,7 +291,7 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
     """The streaming GroupState count fold must land on exactly the
     batch heavy-hitter set and counts (additive state ⇒ replay- and
     chunking-independent)."""
-    from mapr_plugins_spark.operators.registry import x_heavy_hitters
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_heavy_hitters
     from mapr_plugins_spark.streaming.registry import s14_stream_heavy_hitters
 
     stream = {
@@ -304,7 +304,7 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
 def test_stream_drift_equals_batch(spark, sf_dir):
     """The streaming histogram fold must finish at exactly the batch
     drift report (commutative addition ⇒ chunking-independent)."""
-    from mapr_plugins_spark.operators.registry import x_drift_chi2
+    from mapr_plugins_spark.operators.reg_analytics import x_drift_chi2
     from mapr_plugins_spark.streaming.registry import s15_stream_drift
 
     stream = {tuple(r) for r in s15_stream_drift(spark, sf_dir).collect()}
@@ -320,7 +320,7 @@ def test_stream_heavy_hitters_bounded_state_and_exact(spark, sf_dir):
     recount), bit-identical to the batch op."""
     from pyspark.sql import functions as F
 
-    from mapr_plugins_spark.operators.registry import x_heavy_hitters
+    from mapr_plugins_spark.operators.reg_sketch_graph import x_heavy_hitters
     from mapr_plugins_spark.streaming.registry import (
         _stream_mg_candidates,
         s17_stream_heavy_hitters_bounded,
@@ -442,7 +442,7 @@ def test_stream_markov_crosses_batch_boundaries(spark, sf_dir):
     boundaries — equality with the batch lead() matrix proves the
     carried last-state works (a stateless per-batch lead would lose
     one pair per key per boundary)."""
-    from mapr_plugins_spark.operators.registry import x_markov_transitions
+    from mapr_plugins_spark.operators.reg_analytics import x_markov_transitions
     from mapr_plugins_spark.streaming.registry import s23_stream_markov
 
     batch = {(r.from_state, r.to_state): (r.n_pair, r.n_from, r.p_micro)
@@ -455,7 +455,7 @@ def test_stream_markov_crosses_batch_boundaries(spark, sf_dir):
 def test_stream_psi_equals_batch(spark, sf_dir):
     """The streaming PSI report equals the batch operator row for row
     — commutative histogram fold + the shared psi_from_cells finish."""
-    from mapr_plugins_spark.operators.registry import x_psi_drift
+    from mapr_plugins_spark.operators.reg_analytics import x_psi_drift
     from mapr_plugins_spark.streaming.registry import s24_stream_psi
 
     batch = {r.bin: (r.rb, r.cb, r.term_micro, r.psi_micro)
@@ -585,7 +585,7 @@ def test_delta_log_keys_leave_no_run_dirs(spark, sf_dir, tmp_path, monkeypatch):
     import os
     import tempfile
 
-    from mapr_plugins_spark.operators.registry import x_rollup_apply_pruned
+    from mapr_plugins_spark.operators.reg_relops import x_rollup_apply_pruned
     from mapr_plugins_spark.session import scratch_dir
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
