@@ -2,8 +2,8 @@
 
 The reference's source is a Kafka-API *connector* plugged into its host
 engine (``MapRStreamingSource.java:70-94``: subscribe to topics, consume
-``(byte[], byte[])`` events, offset policy earliest/latest, partition-
-aligned parallelism). This module realizes that contract through
+``(byte[], byte[])`` events, offset policy earliest/latest, one
+consumer per topic-partition). This module realizes that contract through
 Spark's official Python DataSource extension point
 (``pyspark.sql.datasource``) instead of a file-source shim:
 
@@ -25,16 +25,25 @@ Replay comes from the ``events`` table: rows are dealt round-robin to
 analogue). At cluster scale a partition maps to a broker partition and
 ``read`` streams from the consumer; here it slices parquet row ranges —
 the engine-facing contract (offsets, partitions, schema) is identical.
+
+Offsets and the ``partition`` column stay per topic-partition, but read
+tasks are sized by micro-batch rows: a batch's non-empty ranges are
+packed into ``ceil(rows / _ROWS_PER_TASK)`` tasks (never more than one
+per range, and a range is never split). Every task is one Python-worker
+invocation, whose fixed set-up cost is worth thousands of rows of
+``read``, so a small micro-batch runs as one task, and so does the
+write stage it feeds; a large one still fans out to one task per range.
 """
 
 from __future__ import annotations
 
 import json
+import math
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceStreamReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -44,18 +53,28 @@ _SCHEMA = (
     "offset bigint, timestamp_ms bigint"
 )
 
+#: Micro-batch rows per read task: about where one task's ``read`` work
+#: equals the fixed cost of the Python-worker invocation that runs it.
+_ROWS_PER_TASK = 16_384
+
 
 class MapRStreamPartition(InputPartition):
-    def __init__(self, path: str, part_idx: int, n_parts: int, start: int, end: int, topic: str):
+    """One read task: a contiguous run of ``(partition, start, end,
+    topic)`` offset ranges over the ``n_parts`` topic-partitions."""
+
+    def __init__(self, path: str, n_parts: int, ranges: list[tuple[int, int, int, str]]):
         self.path = path
-        self.part_idx = part_idx
         self.n_parts = n_parts
-        self.start = start
-        self.end = end
-        self.topic = topic
+        self.ranges = ranges
 
 
 class MapRStreamReader(DataSourceStreamReader):
+    """Offsets are per topic-partition row positions, but ``partitions``
+    packs a micro-batch's small ranges into fewer read tasks: one task
+    per ``_ROWS_PER_TASK`` rows, at most one per range. A task is a
+    Python-worker invocation whose fixed cost dwarfs a small range's
+    rows, so per-range tasks would mostly pay set-up."""
+
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
@@ -63,17 +82,21 @@ class MapRStreamReader(DataSourceStreamReader):
         # comma-separated list, as in A1's `topics` config
         # (MapRStreamConfig.java:38-44); each simulated topic gets its
         # own partition set, rows dealt round-robin across the total
-        self.topics = [
-            t.strip()
-            for t in options.get("topics", options.get("topic", "events")).split(",")
-            if t.strip()
-        ]
-        self.n_parts = int(options.get("numPartitions", "4")) * len(self.topics)
+        raw_topics = options.get("topics", options.get("topic", "events"))
+        self.topics = [t.strip() for t in raw_topics.split(",") if t.strip()]
+        if not self.topics:
+            raise ValueError(f"maprstream: no topic name in topics={raw_topics!r}")
+        per_topic = int(options.get("numPartitions", "4"))
+        if per_topic < 1:
+            raise ValueError(f"maprstream: numPartitions must be >= 1, got {per_topic}")
+        self.n_parts = per_topic * len(self.topics)
         # 0 = unlimited: latestOffset jumps to end, so Trigger.AvailableNow
         # replays everything in one batch. A positive value bounds each
         # micro-batch (Kafka maxOffsetsPerTrigger analogue) for use with
         # processing-time triggers.
         self.rows_per_batch = int(options.get("rowsPerBatch", "0"))
+        if self.rows_per_batch < 0:
+            raise ValueError(f"maprstream: rowsPerBatch must be >= 0, got {self.rows_per_batch}")
         self.starting = options.get("startingOffsets", "earliest")
         if self.starting not in ("earliest", "latest"):
             raise ValueError("startingOffsets must be earliest|latest")
@@ -101,38 +124,44 @@ class MapRStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         per_topic = self.n_parts // len(self.topics)
-        out = []
-        for p, (s, e) in enumerate(zip(start["pos"], end["pos"])):
-            if e > s:
-                out.append(
-                    MapRStreamPartition(
-                        self.path, p, self.n_parts, s, e, self.topics[p // per_topic]
-                    )
-                )
-        return out
+        ranges = [
+            (p, s, e, self.topics[p // per_topic])
+            for p, (s, e) in enumerate(zip(start["pos"], end["pos"]))
+            if e > s
+        ]
+        rows = sum(e - s for _, s, e, _ in ranges)
+        k = min(len(ranges), math.ceil(rows / _ROWS_PER_TASK))
+        # contiguous slices whose lengths differ by at most one range
+        return [
+            MapRStreamPartition(
+                self.path, self.n_parts, ranges[i * len(ranges) // k : (i + 1) * len(ranges) // k]
+            )
+            for i in range(k)
+        ]
 
     def read(self, partition: MapRStreamPartition):
+        import numpy as np
         import pyarrow.parquet as pq
 
         t = pq.read_table(partition.path)
-        idx = range(partition.part_idx, t.num_rows, partition.n_parts)
-        take = list(idx)[partition.start : partition.end]
-        sub = t.take(take)
-        cols = sub.to_pydict()
         # epoch millis from the ts column, honoring its physical unit
         # (shipped data is timestamp[us]; do NOT assume nanos)
-        raw_ts = sub.column("ts")
-        unit = getattr(raw_ts.type, "unit", "us")
+        unit = getattr(t.schema.field("ts").type, "unit", "us")
         to_ms = {"s": 1, "ms": 1, "us": 1_000, "ns": 1_000_000}[unit]
         mul = 1_000 if unit == "s" else 1
-        ts_ms = [v * mul // to_ms for v in raw_ts.cast("int64").to_pylist()]
-        names = [n for n in sub.column_names if n != "ts"]
-        for i, off in enumerate(range(partition.start, partition.end)):
-            doc = {n: cols[n][i] for n in names}
-            doc["ts_ms"] = ts_ms[i]
-            key = str(doc.get("user_id", "")).encode()
-            value = json.dumps(doc, sort_keys=True).encode()
-            yield (key, value, partition.topic, partition.part_idx, off, ts_ms[i])
+        names = [n for n in t.column_names if n != "ts"]
+        for p, start, end, topic in partition.ranges:
+            # partition p owns global rows p, p+n, p+2n, ...
+            idx = range(p, t.num_rows, partition.n_parts)[start:end]
+            sub = t.take(np.arange(idx.start, idx.stop, idx.step))
+            cols = sub.to_pydict()
+            ts_ms = [v * mul // to_ms for v in sub.column("ts").cast("int64").to_pylist()]
+            for i, off in enumerate(range(start, end)):
+                doc = {n: cols[n][i] for n in names}
+                doc["ts_ms"] = ts_ms[i]
+                key = str(doc.get("user_id", "")).encode()
+                value = json.dumps(doc, sort_keys=True).encode()
+                yield (key, value, topic, p, off, ts_ms[i])
 
     def commit(self, end: dict) -> None:
         pass
@@ -166,7 +195,7 @@ class _FileCommit(WriterCommitMessage):
         self.filename = filename
 
 
-class MapRDocWriter(DataSourceWriter):
+class MapRDocWriter(DataSourceArrowWriter):
     """Two-phase task commit mirroring the A6 write path
     (``MapRDBJSONSink.java:67-110``): tasks write to a hidden
     PER-WRITER staging dir and report filenames; only the driver-side
@@ -248,15 +277,13 @@ class MapRDocWriter(DataSourceWriter):
         stage = self._stage_dir()
         os.makedirs(stage, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
-        rows = [r.asDict() for r in iterator]
-        cols = self.schema.fieldNames()
         # the declared schema, not inference: an empty partition would
         # otherwise publish null-typed columns that break schema-less reads
-        table = pa.table(
-            {c: [r.get(c) for r in rows] for c in cols},
-            schema=to_arrow_schema(self.schema),
-        )
-        pq.write_table(table, os.path.join(stage, name))
+        want = to_arrow_schema(self.schema)
+        batches = list(iterator)
+        table = pa.Table.from_batches(batches) if batches else want.empty_table()
+        # Spark hands large_string under spark.sql.execution.arrow.useLargeVarTypes
+        pq.write_table(table.cast(want), os.path.join(stage, name))
         return _FileCommit(name)
 
     def commit(self, messages):

@@ -358,7 +358,9 @@ def s11_pyds_kafka_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     key/value/topic/partition/offset records, JSON payload parsed back
     to typed fields (the A2/A4 projection), then a streaming aggregate.
     Reference contract: MapRStreamingSource.java:70-94 (subscribe,
-    byte payloads, earliest offsets, partition-aligned parallelism)."""
+    byte payloads, earliest offsets). Offsets stay per topic-partition;
+    read tasks are sized by batch rows (each costs a Python-worker
+    invocation), so the 4 ranges run as 1 task at sf0.01, 4 at sf0.1."""
     from mapr_plugins_spark.sources.pyds import register
 
     register(spark)

@@ -227,10 +227,35 @@ def _mk_writer(path, overwrite):
     return MapRDocWriter({"path": path}, schema, overwrite=overwrite)
 
 
-def _stage_rows(writer, rows):
-    from pyspark.sql import Row
+def _batch(rows):
+    """The (_id, doc) pairs as the one Arrow batch Spark hands the writer."""
+    import pyarrow as pa
 
-    return writer.write(iter([Row(_id=i, doc=d) for i, d in rows]))
+    ids, docs = zip(*rows)
+    return pa.RecordBatch.from_arrays([pa.array(ids), pa.array(docs)], names=["_id", "doc"])
+
+
+def _stage_rows(writer, rows):
+    return writer.write(iter([_batch(rows)]))
+
+
+def test_maprdoc_writer_casts_batches_to_the_declared_schema(tmp_path):
+    """Arrow batches of another type (large_string, as Spark hands them
+    under useLargeVarTypes) are published under the declared schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    w = _mk_writer(str(tmp_path / "t"), overwrite=False)
+    large = _batch([("1", '{"v": 1}')]).cast(
+        pa.schema([("_id", pa.large_string()), ("doc", pa.large_string())])
+    )
+    msg = w.write(iter([large]))
+    staged = pq.read_table(os.path.join(w._stage_dir(), msg.filename))
+    assert staged.schema.remove_metadata().equals(to_arrow_schema(w.schema))
+    assert staged.to_pylist() == [{"_id": "1", "doc": '{"v": 1}'}]
 
 
 def test_maprdoc_concurrent_overwrite_loser_aborts_cleanly(tmp_path):
@@ -398,7 +423,6 @@ def test_maprdoc_threaded_overwrite_race_yields_one_complete_generation(tmp_path
     import threading
 
     import pyarrow.parquet as pq
-    from pyspark.sql import Row
     from pyspark.sql.types import StringType, StructField, StructType
 
     from mapr_plugins_spark.sources.pyds import MapRDocDataSource
@@ -423,7 +447,7 @@ def test_maprdoc_threaded_overwrite_race_yields_one_complete_generation(tmp_path
             try:
                 ds = MapRDocDataSource(_Opts(path=out))
                 w = ds.writer(schema, overwrite=True)  # public entry
-                msgs = [w.write(iter([Row(_id=i, doc=d) for i, d in rows]))]
+                msgs = [w.write(iter([_batch(rows)]))]
                 barrier.wait(timeout=10)  # maximize commit overlap
                 w.commit(msgs)
             except Exception as ex:

@@ -265,6 +265,91 @@ def test_pyds_multi_topic_subscribe(spark):
     assert all(p == 2 for _, p in rows.values())
 
 
+@pytest.mark.parametrize(
+    "opts, match",
+    [
+        ({"numPartitions": "0"}, "numPartitions"),
+        ({"rowsPerBatch": "-1"}, "rowsPerBatch"),
+        ({"topics": " , "}, "topic"),
+        ({"topic": ""}, "topic"),
+    ],
+    ids=["zero-partitions", "negative-rows-per-batch", "blank-topics", "empty-topic"],
+)
+def test_pyds_reader_rejects_bad_options(sf_dir, opts, match):
+    """Options that would plan no read task, admit without bound, or
+    divide by zero raise at construction instead of delivering 0 rows."""
+    from mapr_plugins_spark.sources.pyds import MapRStreamReader
+
+    with pytest.raises(ValueError, match=match):
+        MapRStreamReader({"path": f"{sf_dir}/events.parquet", **opts})
+
+
+def test_pyds_partitions_pack_small_batches(sf_dir):
+    """Offsets stay per topic-partition, but a batch below _ROWS_PER_TASK
+    plans one read task carrying every range; a batch above it per range
+    plans one task per range, and no range is ever split."""
+    import pyarrow.parquet as pq
+
+    from mapr_plugins_spark.sources import pyds
+
+    r = pyds.MapRStreamReader(
+        {"path": f"{sf_dir}/events.parquet", "topics": "alpha,beta", "numPartitions": "2"}
+    )
+    start, end = r.initialOffset(), r.latestOffset()
+    (task,) = r.partitions(start, end)
+    want = [
+        (p, 0, e, "alpha" if p < 2 else "beta") for p, e in enumerate(end["pos"])
+    ]
+    assert task.ranges == want
+
+    big = pyds._ROWS_PER_TASK + 1
+    tasks = r.partitions({"pos": [3] * 4}, {"pos": [3 + big] * 4})
+    assert [t.ranges for t in tasks] == [
+        [(p, 3, 3 + big, "alpha" if p < 2 else "beta")] for p in range(4)
+    ]
+
+    # packed reading yields each range's rows in offset order, keyed by
+    # the row that partition p owns at that offset (global row p + off*n)
+    user_ids = pq.read_table(f"{sf_dir}/events.parquet").column("user_id").to_pylist()
+    got = list(r.read(task))
+    assert [(t[3], t[4]) for t in got] == [
+        (p, off) for p, s, e, _ in want for off in range(s, e)
+    ]
+    assert all(t[0] == str(user_ids[t[3] + t[4] * 4]).encode() for t in got)
+
+
+def test_pyds_packed_batch_delivers_every_offset_once(spark, sf_dir):
+    """End to end at numPartitions=4: the small batch runs as ONE read
+    task, yet every (partition, offset) pair arrives exactly once and
+    the partition column still names 4 topic-partitions."""
+    from pyspark.sql import functions as F
+
+    from mapr_plugins_spark.sources.pyds import register
+
+    register(spark)
+    seen = []
+
+    def collect(batch, _batch_id):
+        seen.extend(
+            batch.select("partition", "offset", F.spark_partition_id().alias("task")).collect()
+        )
+
+    q = (
+        spark.readStream.format("maprstream")
+        .option("path", f"{sf_dir}/events.parquet")
+        .option("numPartitions", "4")
+        .load()
+        .writeStream.foreachBatch(collect)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    pairs = [(r["partition"], r["offset"]) for r in seen]
+    assert len(pairs) == len(set(pairs)) == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert {p for p, _ in pairs} == {0, 1, 2, 3}
+    assert {r["task"] for r in seen} == {0}
+
+
 def test_as_event_time_is_timezone_independent(spark):
     """NTZ → instant anchoring must not depend on the session timezone:
     the epoch micros of the converted column equal the naive wall time
